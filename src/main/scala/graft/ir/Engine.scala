@@ -4,8 +4,9 @@ import graft.conditions.Condition
 import graft.operators.{Analytics, Stateless, Windows}
 import graft.sinks.FileSink
 import graft.streaming.Streaming
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
 import scala.collection.mutable
 
@@ -152,30 +153,35 @@ object Engine {
 
   /** Static pipeline validation — the analog of the reference's per-action
     * spec checks at config load (`mspec/valid-action?`, used by every
-    * builder). Walks the tree building each node's transform against an
-    * empty frame with the given schema: Catalyst's eager analysis
-    * surfaces unknown actions, malformed params, unknown fields and type
-    * errors per node, WITHOUT executing anything. Returns every problem
-    * found, each prefixed with its node path; empty = valid.
+    * builder). Walks the tree building every node with the builder that
+    * runs it, over an empty frame with the given schema: Catalyst's eager
+    * analysis surfaces unknown actions, malformed params, unknown fields
+    * and type errors per node, and the builders' own bound checks fire
+    * with the messages `run` gives. An action that reads a runtime
+    * artifact or launches Spark jobs declares its output shape beside its
+    * builder ([[Staged]]), so validation never starts a Spark job. Returns
+    * every problem found, each prefixed with its node path; empty = valid.
     */
   def validate(node: Node,
-               spark: org.apache.spark.sql.SparkSession,
+               spark: SparkSession,
                ctx: EngineCtx = EngineCtx(),
-               schema: org.apache.spark.sql.types.StructType = graft.model.Event.schema): Seq[String] = {
-    val empty = spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+               schema: StructType = graft.model.Event.schema): Seq[String] = {
     val errors = Seq.newBuilder[String]
     def fail(at: String, e: Throwable): Unit = {
       val msg = Option(e.getMessage).getOrElse("").linesIterator
         .nextOption().filter(_.nonEmpty).getOrElse(e.getClass.getSimpleName)
       errors += s"$at: $msg"
     }
-    def walk(n: Node, path: String, df: DataFrame, keys: Seq[String]): Unit = {
+    // the routing nodes interp handles itself; every other action is
+    // built by applyOp (or sinkWrite) exactly as run builds it
+    def walk(rawNode: Node, path: String, df: DataFrame, keys: Seq[String]): Unit = {
+      val n = rawNode.copy(params = rawNode.params.map(deepUnmask)) // as interp reads them
       val at = s"$path/${n.action}"
       def recurse(out: DataFrame, ks: Seq[String] = keys): Unit =
         n.children.foreach(walk(_, at, out, ks))
       n.action match {
         case "sdo" | "async-queue!" | "io" => recurse(df)
+        case "stream" => recurse(df) // declaration wrapper
         case "by" =>
           try { val ks = pStrs(n.params.head); ks.foreach(df(_)); recurse(df, ks) }
           catch { case e: Throwable => fail(at, e); recurse(df) }
@@ -204,7 +210,7 @@ object Engine {
           if (n.children.size != 2) errors += s"$at: needs [ok, error] children"
           try df(pStr(n.params.head)) catch { case e: Throwable => fail(at, e) }
           recurse(df)
-        case "custom" =>
+        case "custom" if !ctx.custom.contains("custom") =>
           val name = n.params.headOption.map(pStr).getOrElse("")
           if (!ctx.custom.contains(name)) errors += s"$at: unknown custom action '$name'"
           // a plugin may change the schema arbitrarily, so its subtree
@@ -214,718 +220,15 @@ object Engine {
           val name = n.params.headOption.map(pStr).getOrElse("")
           if (!ctx.outputs.contains(name)) errors += s"$at: Output $name not found"
           recurse(df)
-        case "output-file" =>
-          try {
-            val m = pMap(n.params.head)
-            pStr(m("path"))
-            m.get("fields").map(pStrs).getOrElse(Nil).foreach(df(_))
-          } catch { case e: Throwable => fail(at, e) }
-          recurse(df)
-        case "output-bucketed" =>
-          try {
-            val m = pMap(n.params.head)
-            pStr(m("table")); pLong(m("buckets"))
-            pStrs(m("keys")).foreach(df(_))
-          } catch { case e: Throwable => fail(at, e) }
-          recurse(df)
-        case "output-warc" =>
-          try {
-            val m = pMap(n.params.head)
-            pStr(m("path"))
-            df(pStr(m("uri"))); df(pStr(m("date"))); df(pStr(m("payload")))
-          } catch { case e: Throwable => fail(at, e) }
-          recurse(df)
-        case "output-tfrecord" =>
-          try {
-            val m = pMap(n.params.head)
-            pStr(m("path")); df(pStr(m("payload")))
-          } catch { case e: Throwable => fail(at, e) }
-          recurse(df)
-        case "output-zordered" =>
-          try {
-            val m = pMap(n.params.head)
-            pStr(m("path")); require(pLong(m("shards")) >= 1, "shards must be >= 1")
-            pStrs(m("cols")).foreach(df(_))
-          } catch { case e: Throwable => fail(at, e) }
-          recurse(df)
-        case "output-dedup-store" =>
-          try {
-            val m = pMap(n.params.head)
-            pStr(m("path")); df(pStr(m("id"))); df(pStr(m("text")))
-          } catch { case e: Throwable => fail(at, e) }
-          recurse(df)
-        case "output-bm25-index" | "append-bm25-index" =>
-          try {
-            val m = pMap(n.params.head)
-            pStr(m("path")); df(pStr(m("id"))); df(pStr(m("text")))
-          } catch { case e: Throwable => fail(at, e) }
-          recurse(df)
-        case "bm25-query" =>
-          // index = runtime artifact; doc_id's type comes from the
-          // stored postings when they already exist, long otherwise
-          try {
-            val m = pMap(n.params.head)
-            val qid = df.schema(pStr(m("id"))); df(pStr(m("text")))
-            require(pLong(m("k")) >= 1, "bm25-query: k must be >= 1")
-            val path = pStr(m("index-path"))
-            val docIdType =
-              try df.sparkSession.read.parquet(s"$path/postings").schema("id").dataType
-              catch { case _: Throwable => org.apache.spark.sql.types.LongType }
-            recurse(df.sparkSession.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              org.apache.spark.sql.types.StructType(Seq(
-                qid.copy(name = "query_id"),
-                org.apache.spark.sql.types.StructField("rank",
-                  org.apache.spark.sql.types.LongType, nullable = false),
-                org.apache.spark.sql.types.StructField("doc_id", docIdType),
-                org.apache.spark.sql.types.StructField("score",
-                  org.apache.spark.sql.types.DoubleType)))))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "output-hilbert" =>
-          try {
-            val m = pMap(n.params.head)
-            pStr(m("path")); require(pLong(m("shards")) >= 1, "shards must be >= 1")
-            df(pStr(m("x"))); df(pStr(m("y")))
-          } catch { case e: Throwable => fail(at, e) }
-          recurse(df)
-        case "dedup-delta" =>
-          // the signature STORE is a runtime artifact (an earlier
-          // output-dedup-store may produce it): check params/columns,
-          // declare the output from the operator's own schema constant
-          try {
-            val m = pMap(n.params.head)
-            val id = pStr(m("id")); df(id); df(pStr(m("text"))); pStr(m("store-path"))
-            recurse(graft.operators.IncrementalDedup.deltaSchema(id).fields
-              .foldLeft(df.select(col(id))) { (acc, f) =>
-                if (f.name == id) acc
-                else acc.withColumn(f.name, lit(null).cast(f.dataType))
-              })
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "dedup-pair-eval" =>
-          // the truth pair-list is a runtime artifact (a labeled sample
-          // or an exact-join output); the 1-row report schema is the
-          // operator's own constant
-          try {
-            val m = n.params.headOption.map(pMap).getOrElse(Map.empty)
-            df(m.get("id1").map(pStr).getOrElse("id1"))
-            df(m.get("id2").map(pStr).getOrElse("id2"))
-            pStr(m("truth-path"))
-            recurse(graft.operators.Dedup.PairEvalSchema.fields
-              .foldLeft(df.sparkSession.range(0).select()) { (acc, f) =>
-                acc.withColumn(f.name, lit(null).cast(f.dataType)) })
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "dedup-pair-eval-sweep" =>
-          try {
-            val m = n.params.headOption.map(pMap).getOrElse(Map.empty)
-            df(m.get("id1").map(pStr).getOrElse("id1"))
-            df(m.get("id2").map(pStr).getOrElse("id2"))
-            df(m.get("score").map(pStr).getOrElse("score"))
-            pStr(m("truth-path"))
-            require(m("thresholds").asInstanceOf[Seq[Any]].nonEmpty,
-              "dedup-pair-eval-sweep: empty threshold grid")
-            recurse(graft.operators.Dedup.PairEvalSchema.fields
-              .foldLeft(df.sparkSession.range(0)
-                .select(lit(0.0).as("threshold"))) { (acc, f) =>
-                acc.withColumn(f.name, lit(null).cast(f.dataType)) })
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "substring-probe" =>
-          // the window-hash store is a runtime artifact; output schema
-          // declared from the span-table constant
-          try {
-            val m = pMap(n.params.head)
-            val id = pStr(m("id")); df(id); df(pStr(m("text"))); pStr(m("store-path"))
-            recurse(Seq("begin_tok", "end_tok", "n_tokens")
-              .foldLeft(df.select(col(id))) { (acc, c) =>
-                acc.withColumn(c, lit(null).cast("long")) })
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "output-substring-store" =>
-          try {
-            val m = pMap(n.params.head)
-            pStr(m("path")); df(pStr(m("id"))); df(pStr(m("text")))
-          } catch { case e: Throwable => fail(at, e) }
-          recurse(df)
-        case "stream" => recurse(df) // declaration wrapper
-        case "score-logistic" =>
-          // the model ARTIFACT is a runtime input, not a config error:
-          // compile/validate must stay total when the path does not exist
-          // yet (a train step earlier in the job may produce it) — check
-          // the params and the vec column, skip the parquet read
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("vec"))); pStr(m("model-path"))
-            recurse(df.withColumn(pStr(m("out")), lit(0.0)))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "decontam-overlap" =>
-          // same artifact rule: the benchmark parquet is a runtime input.
-          // Output columns come from the operator's own schema constant —
-          // never hand-duplicated here.
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("id"))); df(pStr(m("text"))); pStr(m("bench-path"))
-            recurse(graft.operators.Decontam.OverlapSchema.foldLeft(
-              df.select(col(pStr(m("id"))))) { case (acc, (name, dt)) =>
-              acc.withColumn(name, lit(null).cast(dt))
-            })
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "salted-join" =>
-          // artifact rule: the small table is a runtime input. Its
-          // columns join the schema only when the artifact already
-          // exists at validate time; otherwise stay schema-preserving
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("key"))); df(pStr(m("id")))
-            require(pLong(m("salts")) >= 1, "salted-join: salts must be >= 1")
-            val path = pStr(m("small-path"))
-            val widened =
-              try {
-                val small = df.sparkSession.read.parquet(path)
-                small.schema.fields.filterNot(f => df.columns.contains(f.name))
-                  .foldLeft(df)((acc, f) =>
-                    acc.withColumn(f.name, lit(null).cast(f.dataType)))
-              } catch { case _: Throwable => df }
-            recurse(widened)
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "decontam-fuzzy" =>
-          // artifact rule: the bench parquet is a runtime input; the
-          // output is the input frame filtered — schema unchanged
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("id"))); df(pStr(m("text"))); pStr(m("bench-path"))
-          } catch { case e: Throwable => fail(at, e) }
-          recurse(df)
-        case "decontam-exact" =>
-          // same artifact rule as decontam-fuzzy: bench parquet is a
-          // runtime input; output = input filtered, schema unchanged
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("id"))); df(pStr(m("text"))); pStr(m("bench-path"))
-            m.get("min-hits").foreach { v =>
-              require(pLong(v) >= 1, "decontam-exact: min-hits must be >= 1") }
-          } catch { case e: Throwable => fail(at, e) }
-          recurse(df)
-        case "ks-drift" =>
-          // artifact rule: the comparison corpus is a runtime input;
-          // output from the operator's schema constant
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("value"))); pStr(m("other-path"))
-            recurse(df.sparkSession.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              graft.operators.Curation.KsDriftSchema))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "vocab-drift" | "vocab-kl" =>
-          // artifact rule: the comparison corpus is a runtime input
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("text"))); pStr(m("other-path"))
-            val base = df.sparkSession.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              graft.operators.Curation.VocabDriftSchema)
-            recurse(if (n.action == "vocab-kl")
-              base.withColumn("kl_term", lit(0.0)) else base)
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "source-zscores" =>
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("group"))); df(pStr(m("value")))
-            recurse(df.withColumn("zscore", lit(0.0))
-              .withColumn("is_outlier", lit(false)))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "psi-report" =>
-          // artifact rule: the comparison snapshot is a runtime input
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("value")))
-            pStr(m("other-path"))
-            require(m("edges").asInstanceOf[Seq[Any]].nonEmpty, "psi-report: empty edges")
-            recurse(df.sparkSession.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              graft.operators.Curation.PsiReportSchema))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "kmv-overlap" =>
-          // artifact rule: the comparison corpus is a runtime input
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("text"))); pStr(m("other-path"))
-            require(pLong(m("k")) >= 2, "kmv-overlap: k must be >= 2")
-            recurse(df.sparkSession.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              graft.operators.Sketches.KmvOverlapSchema))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "vocab-coverage" =>
-          // artifact rule: the vocabulary table is a runtime input; the
-          // group column's type carries through from the input frame
-          try {
-            val m = pMap(n.params.head)
-            val g = df(pStr(m("group"))); df(pStr(m("text"))); pStr(m("vocab-path"))
-            val schema = org.apache.spark.sql.types.StructType(Seq(
-              df.schema(pStr(m("group"))),
-              org.apache.spark.sql.types.StructField("n_tokens", org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("n_oov", org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("oov_rate", org.apache.spark.sql.types.DoubleType)))
-            val _ = g
-            recurse(df.sparkSession.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "snapshot-diff" =>
-          // artifact rule: the old snapshot parquet is a runtime input.
-          // Output = key + the operator's own schema constant.
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("key"))); df(pStr(m("digest"))); pStr(m("old-path"))
-            recurse(graft.operators.Snapshots.DiffSchema.foldLeft(
-              df.select(col(pStr(m("key"))))) { case (acc, (name, dt)) =>
-              acc.withColumn(name, lit(null).cast(dt))
-            })
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "refetch-candidates" =>
-          // artifact rule: the capture index parquet is a runtime input
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("loc"))); df(pStr(m("lastmod"))); pStr(m("captures-path"))
-            recurse(df
-              .withColumn("urlkey", lit(null).cast(org.apache.spark.sql.types.StringType))
-              .withColumn("last_capture_ts", lit(null).cast(org.apache.spark.sql.types.StringType))
-              .withColumn("reason", lit(null).cast(org.apache.spark.sql.types.StringType)))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "train-logistic" =>
-          // empty-frame totality lives HERE, not in the trainer: probe
-          // the params/columns, emit the model schema without running a
-          // count over the empty frame (an empty PRODUCTION training
-          // frame must stay a loud runtime error)
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("id"))); df(pStr(m("vec"))); df(pStr(m("label"))); pLong(m("dim"))
-            recurse(df.sparkSession.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              graft.operators.Training.ModelSchema))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "hard-negatives" | "hard-negatives-bucketed" =>
-          // artifact rule: the anchor batch is a runtime input
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("id"))); df(pStr(m("vec"))); df(pStr(m("label")))
-            pStr(m("anchors-path")); pLong(m("k"))
-            recurse(df.sparkSession.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              graft.operators.Similarity.HardNegSchema))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "el2n-scores" =>
-          // probe-model artifact rule: scores append to the input frame
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("vec"))); df(pStr(m("label"))); pStr(m("model-path"))
-            recurse(df.withColumn("el2n", lit(0.0)).withColumn("grand", lit(0.0)))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "prototype-ranks" | "cluster-prune" =>
-          // centroid artifact rule: (id, cell, cosine[, proto_rank]) out
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("vec"))); pStr(m("centroids-path"))
-            if (n.action == "cluster-prune")
-              require(pLong(m("per-cluster")) >= 1, "cluster-prune: per-cluster must be >= 1")
-            val base = df.select(col(pStr(m("id"))))
-              .withColumn("cell", lit(0L)).withColumn("cosine", lit(0.0))
-            recurse(if (n.action == "prototype-ranks")
-              base.withColumn("proto_rank", lit(0)) else base)
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "kcenter-coreset" =>
-          // artifact-free model-sized output; schema from the operator
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("id"))); df(pStr(m("vec")))
-            require(pLong(m("k")) >= 1, "kcenter-coreset: k must be >= 1")
-            recurse(df.sparkSession.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              graft.operators.Pruning.KcenterSchema))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "cartography" =>
-          // trace artifact rule: stats append to the input frame
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("vec"))); df(pStr(m("label"))); pStr(m("trace-path"))
-            recurse(df.withColumn("confidence", lit(0.0))
-              .withColumn("variability", lit(0.0))
-              .withColumn("correct_frac", lit(0.0))
-              .withColumn("region", lit("ambiguous")))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "jaccard-join" =>
-          try {
-            val m = pMap(n.params.head)
-            val idf = df.schema(pStr(m("id"))); df(pStr(m("text")))
-            val th = pDouble(m("threshold"))
-            require(th > 0.0 && th < 1.0, "jaccard-join: threshold must be in (0,1)")
-            recurse(df.sparkSession.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              org.apache.spark.sql.types.StructType(Seq(
-                idf.copy(name = "id1"), idf.copy(name = "id2"),
-                org.apache.spark.sql.types.StructField("jaccard",
-                  org.apache.spark.sql.types.DoubleType)))))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "bootstrap-ci" =>
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("val"))); df(pStr(m("id")))
-            val groups = pStrs(m("group"))
-            require(groups.nonEmpty, "bootstrap-ci: group must be non-empty")
-            m.get("alpha").foreach { a =>
-              require(pDouble(a) > 0.0 && pDouble(a) < 1.0,
-                "bootstrap-ci: alpha must be in (0,1)") }
-            m.get("r").foreach { v => require(pLong(v) >= 1, "bootstrap-ci: r must be >= 1") }
-            recurse(df.select(groups.map(col): _*)
-              .withColumn("n", lit(0L))
-              .withColumn("point", lit(0.0))
-              .withColumn("ci_lo", lit(0.0))
-              .withColumn("ci_hi", lit(0.0)))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "winnow-fingerprints" =>
-          try {
-            val m = pMap(n.params.head)
-            val idf = df.schema(pStr(m("id"))); df(pStr(m("text")))
-            m.get("k").foreach { v => require(pLong(v) >= 1, "winnow-fingerprints: k must be >= 1") }
-            m.get("w").foreach { v => require(pLong(v) >= 1, "winnow-fingerprints: w must be >= 1") }
-            recurse(df.sparkSession.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              org.apache.spark.sql.types.StructType(Seq(
-                idf,
-                org.apache.spark.sql.types.StructField("pos",
-                  org.apache.spark.sql.types.LongType),
-                org.apache.spark.sql.types.StructField("fp",
-                  org.apache.spark.sql.types.LongType)))))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "winnow-candidates" =>
-          try {
-            val m = pMap(n.params.head)
-            val idf = df.schema(pStr(m("id"))); df(pStr(m("text")))
-            m.get("min-shared").foreach { v =>
-              require(pLong(v) >= 1, "winnow-candidates: min-shared must be >= 1") }
-            m.get("max-df").foreach { v =>
-              require(pLong(v) >= 2, "winnow-candidates: max-df must be >= 2") }
-            recurse(df.sparkSession.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              org.apache.spark.sql.types.StructType(Seq(
-                idf.copy(name = "id1"), idf.copy(name = "id2"),
-                org.apache.spark.sql.types.StructField("shared",
-                  org.apache.spark.sql.types.LongType)))))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "edit-confirm" =>
-          try {
-            val m = pMap(n.params.head)
-            val idf = df.schema(pStr(m("id"))); df(pStr(m("text")))
-            val ms = pDouble(m("min-sim"))
-            require(ms >= 0.0 && ms <= 1.0, "edit-confirm: min-sim must be in [0,1]")
-            m.get("max-len").foreach { l =>
-              require(pLong(l) >= 1, "edit-confirm: max-len must be >= 1") }
-            recurse(df.sparkSession.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              org.apache.spark.sql.types.StructType(Seq(
-                idf.copy(name = "id1"), idf.copy(name = "id2"),
-                org.apache.spark.sql.types.StructField("edit_dist",
-                  org.apache.spark.sql.types.LongType),
-                org.apache.spark.sql.types.StructField("edit_sim",
-                  org.apache.spark.sql.types.DoubleType)))))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "ivfpq-build" | "ivfpq-append" =>
-          // sink-like artifact writer: params/columns checked, no IO
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("id"))); df(pStr(m("vec"))); pStr(m("path"))
-            recurse(df)
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "opq-build" =>
-          // sink-like artifact writer: params/columns checked, no IO
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("id"))); df(pStr(m("vec"))); pStr(m("path"))
-            recurse(df)
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "opq-query" =>
-          // index artifact rule: fixed (query_id, rank, nn_id, score) out
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("id"))); df(pStr(m("vec"))); pStr(m("index-path"))
-            require(pLong(m("k")) >= 1, "opq-query: k must be >= 1")
-            recurse(df.select(col(pStr(m("id"))).cast("long").as("query_id"))
-              .withColumn("rank", lit(0L))
-              .withColumn("nn_id", lit(0L))
-              .withColumn("score", lit(0.0)))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "ivfpq-query" =>
-          // index artifact rule: fixed (query_id, rank, nn_id, score) out
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("id"))); df(pStr(m("vec"))); pStr(m("index-path"))
-            require(pLong(m("k")) >= 1, "ivfpq-query: k must be >= 1")
-            recurse(df.select(col(pStr(m("id"))).cast("long").as("query_id"))
-              .withColumn("rank", lit(0L))
-              .withColumn("nn_id", lit(0L))
-              .withColumn("score", lit(0.0)))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "mmr-rerank" =>
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("rel"))); df(pStr(m("vec")))
-            require(pLong(m("k")) >= 1, "mmr-rerank: k must be >= 1")
-            m.get("lambda").foreach { l =>
-              require(pDouble(l) >= 0.0 && pDouble(l) <= 1.0,
-                "mmr-rerank: lambda must be in [0,1]") }
-            // fixed output types: the operator casts query/id to long
-            recurse(df.select(col(pStr(m("query"))).cast("long"))
-              .withColumn("mmr_rank", lit(0))
-              .withColumn(pStr(m("id")), lit(0L))
-              .withColumn("mmr_score", lit(0.0)))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "pca-train" =>
-          // artifact rule: probe params/columns, emit the components
-          // schema without running the corpus pass
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("vec"))); pLong(m("dim")); pLong(m("k")); pStr(m("path"))
-            recurse(df.sparkSession.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("component",
-                  org.apache.spark.sql.types.IntegerType, nullable = false),
-                org.apache.spark.sql.types.StructField("eig_val",
-                  org.apache.spark.sql.types.DoubleType, nullable = false),
-                org.apache.spark.sql.types.StructField("row",
-                  org.apache.spark.sql.types.ArrayType(
-                    org.apache.spark.sql.types.DoubleType))))))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "pca-whiten" | "pca-project" =>
-          // the PCA model is a runtime artifact: skip the parquet read
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("vec"))); pStr(m("model-path"))
-            recurse(df.withColumn(pStr(m("out")),
-              array().cast("array<double>")))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "ngram-train" =>
-          // artifact rule: writes the model to disk as a side effect;
-          // validate probes params/columns and emits the counts schema
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("text"))); pLong(m("n")); pDouble(m("alpha")); pStr(m("path"))
-            recurse(df.sparkSession.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              graft.operators.NgramLm.CountsSchema))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "ngram-score" =>
-          // the LM model is a runtime artifact (an ngram-train step
-          // earlier in the job may produce it): skip the parquet read
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("text"))); df(pStr(m("id"))); pStr(m("model-path"))
-            recurse(df.withColumn("n_scored", lit(0L))
-              .withColumn("logprob", lit(0.0))
-              .withColumn("cross_entropy", lit(0.0))
-              .withColumn("ppl", lit(0.0)))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "kn-train" =>
-          // same artifact rule as ngram-train
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("text"))); pStr(m("path"))
-            m.get("discount").foreach(pDouble)
-            recurse(df.sparkSession.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              graft.operators.NgramLm.CountsSchema))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "kn-score" | "sb-score" =>
-          // same artifact rule as ngram-score
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("text"))); df(pStr(m("id"))); pStr(m("model-path"))
-            recurse(df.withColumn("n_scored", lit(0L))
-              .withColumn("logprob", lit(0.0))
-              .withColumn("cross_entropy", lit(0.0))
-              .withColumn("ppl", lit(0.0)))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "bpe-train" =>
-          // artifact rule: training runs iterative jobs; validate probes
-          // the params/columns and emits the model schema only
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("text"))); pLong(m("merges"))
-            recurse(df.sparkSession.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              graft.operators.Tokenizer.MergesSchema))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "unigram-train" =>
-          // artifact rule: iterative EM jobs; validate probes params and
-          // emits the model schema only
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("text"))); pLong(m("vocab"))
-            val mode = m.get("mode").map(pStr).getOrElse("hard")
-            require(mode == "hard" || mode == "soft",
-              s"unigram-train: mode must be 'hard' or 'soft', got '$mode'")
-            recurse(df.sparkSession.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("piece",
-                  org.apache.spark.sql.types.StringType),
-                org.apache.spark.sql.types.StructField("logp",
-                  org.apache.spark.sql.types.DoubleType, nullable = false)))))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "unigram-encode" =>
-          // the piece table is a runtime artifact: skip the parquet read
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("text"))); pStr(m("model-path"))
-            recurse(df.withColumn(pStr(m("out")), array().cast("array<string>")))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "wordpiece-train" =>
-          // artifact rule: training runs iterative jobs; validate probes
-          // the params/columns and emits the vocab schema only
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("text"))); pLong(m("merges"))
-            recurse(df.sparkSession.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              graft.operators.WordPiece.VocabSchema))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "wordpiece-encode" =>
-          // the vocab table is a runtime artifact: skip the parquet read
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("text"))); pStr(m("model-path"))
-            recurse(df.withColumn(pStr(m("out")), array().cast("array<string>")))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "bpe-encode" =>
-          // the merge table is a runtime artifact (a bpe-train step
-          // earlier in the job may produce it): skip the parquet read
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("text"))); pStr(m("model-path"))
-            recurse(df.withColumn(pStr(m("out")), array().cast("array<string>")))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "cms-topk" | "heavy-hitters" | "hll-distinct" =>
-          // eager sketch actions (driver-side collect/head inside the
-          // operator): validate probes params and emits the schema only —
-          // static validation must never launch Spark jobs
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("text")))
-            n.action match {
-              case "cms-topk" =>
-                pLong(m("depth")); pLong(m("width")); pLong(m("k"))
-                recurse(df.sparkSession.createDataFrame(
-                  java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-                  org.apache.spark.sql.types.StructType(Seq(
-                    org.apache.spark.sql.types.StructField("token",
-                      org.apache.spark.sql.types.StringType),
-                    org.apache.spark.sql.types.StructField("est",
-                      org.apache.spark.sql.types.LongType, nullable = false)))))
-              case "heavy-hitters" =>
-                pLong(m("k"))
-                recurse(df.sparkSession.createDataFrame(
-                  java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-                  org.apache.spark.sql.types.StructType(Seq(
-                    org.apache.spark.sql.types.StructField("token",
-                      org.apache.spark.sql.types.StringType),
-                    org.apache.spark.sql.types.StructField("cnt",
-                      org.apache.spark.sql.types.LongType, nullable = false)))))
-              case _ =>
-                pLong(m("b"))
-                recurse(df.sparkSession.createDataFrame(
-                  java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-                  org.apache.spark.sql.types.StructType(Seq(
-                    org.apache.spark.sql.types.StructField("m",
-                      org.apache.spark.sql.types.LongType, nullable = false),
-                    org.apache.spark.sql.types.StructField("n_zero",
-                      org.apache.spark.sql.types.LongType, nullable = false),
-                    org.apache.spark.sql.types.StructField("est",
-                      org.apache.spark.sql.types.DoubleType, nullable = false)))))
-            }
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "pagerank" =>
-          // eager (the power iteration materializes + collects per
-          // round): validate probes params and emits the schema only
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("src"))); df(pStr(m("dst")))
-            recurse(df.sparkSession.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("node",
-                  org.apache.spark.sql.types.StringType),
-                org.apache.spark.sql.types.StructField("rank",
-                  org.apache.spark.sql.types.DoubleType, nullable = false)))))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "hits" =>
-          // eager like pagerank: params probed, schema emitted
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("src"))); df(pStr(m("dst")))
-            m.get("iters").foreach { v => require(pLong(v) >= 1, "hits: iters must be >= 1") }
-            recurse(df.sparkSession.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("node",
-                  org.apache.spark.sql.types.StringType),
-                org.apache.spark.sql.types.StructField("auth",
-                  org.apache.spark.sql.types.DoubleType, nullable = false),
-                org.apache.spark.sql.types.StructField("hub",
-                  org.apache.spark.sql.types.DoubleType, nullable = false)))))
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "doremi-weights" | "doremi-reweight" =>
-          // eager (the MW loop collects the model-sized domain stats):
-          // validate probes params and emits the schema only
-          try {
-            val m = pMap(n.params.head)
-            df(pStr(m("domain"))); df(pStr(m("loss"))); pDouble(m("ref"))
-            n.action match {
-              case "doremi-weights" =>
-                recurse(df.sparkSession.createDataFrame(
-                  java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-                  org.apache.spark.sql.types.StructType(Seq(
-                    org.apache.spark.sql.types.StructField("domain",
-                      org.apache.spark.sql.types.StringType),
-                    org.apache.spark.sql.types.StructField("n",
-                      org.apache.spark.sql.types.LongType, nullable = false),
-                    org.apache.spark.sql.types.StructField("excess",
-                      org.apache.spark.sql.types.DoubleType, nullable = false),
-                    org.apache.spark.sql.types.StructField("weight",
-                      org.apache.spark.sql.types.DoubleType)))))
-              case _ =>
-                df(pStr(m("id")))
-                recurse(df.withColumn("copy", lit(0L)))
-            }
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
-        case "kmv-quantiles" | "kmv-distinct" =>
-          // eager KMV faces (driver-side collect inside the operator):
-          // validate probes params and emits the schema only
-          try {
-            val m = pMap(n.params.head)
-            pLong(m("k"))
-            n.action match {
-              case "kmv-quantiles" =>
-                df(pStr(m("id"))); df(pStr(m("value"))); pDoubles(m("qs"))
-                recurse(df.sparkSession.createDataFrame(
-                  java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-                  org.apache.spark.sql.types.StructType(Seq(
-                    org.apache.spark.sql.types.StructField("q",
-                      org.apache.spark.sql.types.DoubleType, nullable = false),
-                    org.apache.spark.sql.types.StructField("value",
-                      org.apache.spark.sql.types.DoubleType, nullable = false)))))
-              case _ =>
-                df(pStr(m("text")))
-                recurse(df.sparkSession.createDataFrame(
-                  java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-                  org.apache.spark.sql.types.StructType(Seq(
-                    org.apache.spark.sql.types.StructField("k_kept",
-                      org.apache.spark.sql.types.LongType, nullable = false),
-                    org.apache.spark.sql.types.StructField("h_k",
-                      org.apache.spark.sql.types.LongType, nullable = false),
-                    org.apache.spark.sql.types.StructField("est",
-                      org.apache.spark.sql.types.DoubleType, nullable = false)))))
-            }
-          } catch { case e: Throwable => fail(at, e); recurse(df) }
         case _ =>
           val out =
-            try applyOp(n.action, n.params, keys, ctx)(df)
-            catch { case e: Throwable => fail(at, e); df }
+            try sinkWrite(n.action, n.params, df) match {
+              case Some(_) => df
+              case None => applyOp(n.action, n.params, keys, ctx) match {
+                case staged: Staged => staged.shape(df)
+                case build          => build(df)
+              }
+            } catch { case e: Throwable => fail(at, e); df }
           recurse(out)
       }
     }
@@ -934,7 +237,7 @@ object Engine {
     val expanded =
       try Node.expandIncludes(node)
       catch { case e: Throwable => fail("/include", e); null }
-    if (expanded != null) walk(expanded, "", empty, Nil)
+    if (expanded != null) walk(expanded, "", emptyFrame(spark, schema), Nil)
     errors.result()
   }
 
@@ -1062,100 +365,82 @@ object Engine {
         }
         recurse(df)
 
-      case "output-file" => // file sink (output/file.clj:10-50); io-gated
-        val m = pMap(n.params.head)
-        val spec = SinkSpec(
-          pStr(m("path")),
-          m.get("fields").map(pStrs).getOrElse(Nil),
-          m.get("date-pattern").map(pStr))
-        if (!ctx.testMode) {
+      case _ =>
+        sinkWrite(n.action, n.params, df) match {
+          case Some(write) => if (!ctx.testMode) write(res); recurse(df)
+          case None        => recurse(applyOp(n.action, n.params, keys, ctx)(df))
+        }
+    }
+  }
+
+  /** The file and index sinks, one param decode each: the decode checks
+    * every param and resolves every column the sink writes, so
+    * [[validate]] and [[interp]] share it. Only `interp` runs the returned
+    * write, and only outside test mode. `None` for every other action.
+    */
+  private def sinkWrite(action: String, params: Seq[Any],
+                        df: DataFrame): Option[StreamResult => Unit] = {
+    lazy val m = pMap(params.head)
+    def column(key: String): String = { val c = pStr(m(key)); df(c); c }
+    def opt(key: String, default: Int): Int = m.get(key).map(pLong(_).toInt).getOrElse(default)
+    def shards: Int = {
+      val s = pLong(m("shards"))
+      require(s >= 1, "shards must be >= 1")
+      s.toInt
+    }
+    action match {
+      case "output-file" => // file sink (output/file.clj:10-50)
+        val spec = SinkSpec(pStr(m("path")),
+          m.get("fields").map(pStrs).getOrElse(Nil), m.get("date-pattern").map(pStr))
+        spec.partitionFields.foreach(df(_))
+        Some { res =>
           if (df.isStreaming) res.streamingQueries += FileSink.writeStream(df, spec)
           else FileSink.write(df, spec)
           res.sinks += ((spec, df))
         }
-        recurse(df)
-
-      case "output-bucketed" => // bucketed managed-table sink; io-gated
-        val m = pMap(n.params.head)
-        if (!ctx.testMode)
-          FileSink.writeBucketed(df, pStr(m("table")),
-            pLong(m("buckets")).toInt, pStrs(m("keys")))
-        recurse(df)
-
-      case "output-warc" => // WARC archive export; io-gated
-        val m = pMap(n.params.head)
-        if (!ctx.testMode) {
-          val recs = df.withColumn("__rec", graft.sources.Warc.recordBytes(
-            col(pStr(m("uri"))), col(pStr(m("date"))),
-            col(pStr(m("payload")))))
-          graft.sources.Warc.writeArchives(recs, "__rec", pStr(m("path")),
-            m.get("gzip").forall(_.asInstanceOf[Boolean]))
-        }
-        recurse(df)
-
-      case "output-tfrecord" => // TFRecord shard export; io-gated
-        val m = pMap(n.params.head)
-        if (!ctx.testMode) {
-          val recs = df.withColumn("__rec",
-            graft.sources.TfRecord.frame(col(pStr(m("payload")))))
-          graft.sources.TfRecord.writeShards(recs, "__rec", pStr(m("path")),
-            m.get("gzip").exists(_.asInstanceOf[Boolean]))
-        }
-        recurse(df)
-
-      case "output-zordered" => // Z-order clustered parquet export; io-gated
-        val m = pMap(n.params.head)
-        if (!ctx.testMode)
-          graft.sources.Layout.writeZOrdered(df,
-            pStrs(m("cols")).map(col), pStr(m("path")),
-            pLong(m("shards")).toInt,
-            m.get("bits").map(pLong(_).toInt).getOrElse(16))
-        recurse(df)
-
-      case "output-hilbert" => // Hilbert-clustered parquet export; io-gated
-        val m = pMap(n.params.head)
-        if (!ctx.testMode)
-          graft.sources.Layout.writeHilbertOrdered(df,
-            col(pStr(m("x"))), col(pStr(m("y"))), pStr(m("path")),
-            pLong(m("shards")).toInt,
-            m.get("bits").map(pLong(_).toInt).getOrElse(16))
-        recurse(df)
-
-      case "output-bm25-index" => // persist the BM25 postings index; io-gated
-        val m = pMap(n.params.head)
-        if (!ctx.testMode)
-          graft.operators.Retrieval.buildBm25Index(df,
-            pStr(m("id")), pStr(m("text")), pStr(m("path")),
-            m.get("buckets").map(pLong(_).toInt).getOrElse(64))
-        recurse(df)
-
-      case "append-bm25-index" => // delta-append to an existing index; io-gated
-        val m = pMap(n.params.head)
-        if (!ctx.testMode)
-          graft.operators.Retrieval.appendBm25Index(df,
-            pStr(m("id")), pStr(m("text")), pStr(m("path")))
-        recurse(df)
-
-      case "output-dedup-store" => // persist the dedup signature index; io-gated
-        val m = pMap(n.params.head)
-        if (!ctx.testMode)
-          graft.operators.IncrementalDedup.writeStore(df,
-            pStr(m("text")), pStr(m("id")), pStr(m("path")),
-            m.get("k").map(pLong(_).toInt).getOrElse(8),
-            m.get("rows-per-band").map(pLong(_).toInt).getOrElse(2),
-            m.get("buckets").map(pLong(_).toInt).getOrElse(64))
-        recurse(df)
-
-      case "output-substring-store" => // persist the window-hash store; io-gated
-        val m = pMap(n.params.head)
-        if (!ctx.testMode)
-          graft.operators.SubstringStore.writeStore(df,
-            pStr(m("text")), pStr(m("id")), pStr(m("path")),
-            m.get("min-len").map(pLong(_).toInt).getOrElse(50),
-            m.get("buckets").map(pLong(_).toInt).getOrElse(64))
-        recurse(df)
-
-      case _ => recurse(applyOp(n.action, n.params, keys, ctx)(df))
+      case "output-bucketed" => // bucketed managed-table sink
+        val (table, buckets, keys) = (pStr(m("table")), pLong(m("buckets")).toInt, pStrs(m("keys")))
+        keys.foreach(df(_))
+        Some(_ => FileSink.writeBucketed(df, table, buckets, keys))
+      case "output-warc" => // WARC archive export
+        val (path, uri, date, payload) =
+          (pStr(m("path")), column("uri"), column("date"), column("payload"))
+        val gzip = m.get("gzip").forall(_.asInstanceOf[Boolean])
+        Some(_ => graft.sources.Warc.writeArchives(
+          df.withColumn("__rec", graft.sources.Warc.recordBytes(col(uri), col(date), col(payload))),
+          "__rec", path, gzip))
+      case "output-tfrecord" => // TFRecord shard export
+        val (path, payload) = (pStr(m("path")), column("payload"))
+        val gzip = m.get("gzip").exists(_.asInstanceOf[Boolean])
+        Some(_ => graft.sources.TfRecord.writeShards(
+          df.withColumn("__rec", graft.sources.TfRecord.frame(col(payload))), "__rec", path, gzip))
+      case "output-zordered" => // Z-order clustered parquet export
+        val (path, n) = (pStr(m("path")), shards)
+        val cols = pStrs(m("cols"))
+        cols.foreach(df(_))
+        val bits = opt("bits", 16)
+        Some(_ => graft.sources.Layout.writeZOrdered(df, cols.map(col), path, n, bits))
+      case "output-hilbert" => // Hilbert-clustered parquet export
+        val (path, n, x, y) = (pStr(m("path")), shards, column("x"), column("y"))
+        val bits = opt("bits", 16)
+        Some(_ => graft.sources.Layout.writeHilbertOrdered(df, col(x), col(y), path, n, bits))
+      case "output-bm25-index" => // persist the BM25 postings index
+        val (path, id, text) = (pStr(m("path")), column("id"), column("text"))
+        val buckets = opt("buckets", 64)
+        Some(_ => graft.operators.Retrieval.buildBm25Index(df, id, text, path, buckets))
+      case "append-bm25-index" => // delta-append to an existing index
+        val (path, id, text) = (pStr(m("path")), column("id"), column("text"))
+        Some(_ => graft.operators.Retrieval.appendBm25Index(df, id, text, path))
+      case "output-dedup-store" => // persist the dedup signature index
+        val (path, id, text) = (pStr(m("path")), column("id"), column("text"))
+        val (k, rowsPerBand, buckets) = (opt("k", 8), opt("rows-per-band", 2), opt("buckets", 64))
+        Some(_ => graft.operators.IncrementalDedup.writeStore(df, text, id, path,
+          k, rowsPerBand, buckets))
+      case "output-substring-store" => // persist the window-hash store
+        val (path, id, text) = (pStr(m("path")), column("id"), column("text"))
+        val (minLen, buckets) = (opt("min-len", 50), opt("buckets", 64))
+        Some(_ => graft.operators.SubstringStore.writeStore(df, text, id, path, minLen, buckets))
+      case _ => None
     }
   }
 
@@ -1580,43 +865,55 @@ object Engine {
       df => graft.operators.Curation.curriculumOrder(df, pStr(m("id")), pStr(m("score")),
         m.get("stages").map(pLong(_).toInt).getOrElse(4),
         m.get("seed").map(pStr).getOrElse("curriculum"))
-    case "vocab-drift" =>
+    case "vocab-drift" | "vocab-kl" =>
+      // vocab-kl adds the signed KL terms
       val m = pMap(params.head)
-      df => {
-        val other = df.sparkSession.read.parquet(pStr(m("other-path")))
-        graft.operators.Curation.vocabDrift(df, other, pStr(m("text")))
-      }
-    case "vocab-kl" =>
-      // same artifact rule as vocab-drift, plus the signed KL terms
-      val m = pMap(params.head)
-      df => graft.operators.Curation.vocabKl(df,
-        df.sparkSession.read.parquet(pStr(m("other-path"))), pStr(m("text")))
+      val (text, otherPath) = (pStr(m("text")), pStr(m("other-path")))
+      val kl = action == "vocab-kl"
+      Staged(
+        reads(text) { df =>
+          val out = emptyFrame(df.sparkSession, graft.operators.Curation.VocabDriftSchema)
+          if (kl) out.withColumn("kl_term", lit(0.0)) else out
+        },
+        df => {
+          val other = df.sparkSession.read.parquet(otherPath)
+          if (kl) graft.operators.Curation.vocabKl(df, other, text)
+          else graft.operators.Curation.vocabDrift(df, other, text)
+        })
     case "source-zscores" =>
       val m = pMap(params.head)
-      df => graft.operators.Curation.sourceZscores(df, pStr(m("group")), pStr(m("value")),
-        m.get("threshold").map(pDouble).getOrElse(3.0))
+      val (group, value) = (pStr(m("group")), pStr(m("value")))
+      val threshold = m.get("threshold").map(pDouble).getOrElse(3.0)
+      Staged(
+        reads(group, value)(_.withColumn("zscore", lit(0.0)).withColumn("is_outlier", lit(false))),
+        df => graft.operators.Curation.sourceZscores(df, group, value, threshold))
     case "psi-report" =>
       val m = pMap(params.head)
+      val (value, otherPath) = (pStr(m("value")), pStr(m("other-path")))
       val edges = m("edges").asInstanceOf[Seq[Any]].map(pDouble)
-      df => {
-        val other = df.sparkSession.read.parquet(pStr(m("other-path")))
-        graft.operators.Curation.psiReport(df, other, pStr(m("value")), edges,
-          eps = m.get("eps").map(pDouble).getOrElse(1e-6))
-      }
+      require(edges.nonEmpty, "psi-report: empty edges")
+      val eps = m.get("eps").map(pDouble).getOrElse(1e-6)
+      Staged(fixed(graft.operators.Curation.PsiReportSchema, value),
+        df => graft.operators.Curation.psiReport(df,
+          df.sparkSession.read.parquet(otherPath), value, edges, eps = eps))
     case "kmv-overlap" =>
       val m = pMap(params.head)
-      df => {
-        val other = df.sparkSession.read.parquet(pStr(m("other-path")))
-        graft.operators.Sketches.kmvOverlap(df, other, pStr(m("text")),
-          pLong(m("k")).toInt, m.get("seed").map(pStr).getOrElse("kmv"))
-      }
+      val (text, otherPath, k) = (pStr(m("text")), pStr(m("other-path")), pLong(m("k")))
+      require(k >= 2, "kmv-overlap: k must be >= 2")
+      val seed = m.get("seed").map(pStr).getOrElse("kmv")
+      Staged(fixed(graft.operators.Sketches.KmvOverlapSchema, text),
+        df => graft.operators.Sketches.kmvOverlap(df,
+          df.sparkSession.read.parquet(otherPath), text, k.toInt, seed))
     case "vocab-coverage" =>
+      // the group column's type carries through from the input frame
       val m = pMap(params.head)
-      df => {
-        val vocab = df.sparkSession.read.parquet(pStr(m("vocab-path")))
-        graft.operators.Curation.vocabCoverage(df, pStr(m("group")), pStr(m("text")),
-          vocab, tokenCol = m.get("token").map(pStr).getOrElse("token"))
-      }
+      val (group, text, vocabPath) = (pStr(m("group")), pStr(m("text")), pStr(m("vocab-path")))
+      val token = m.get("token").map(pStr).getOrElse("token")
+      Staged(
+        reads(group, text)(df => emptyFrame(df.sparkSession, StructType(df.schema(group) +:
+          StructType.fromDDL("n_tokens BIGINT, n_oov BIGINT, oov_rate DOUBLE").fields))),
+        df => graft.operators.Curation.vocabCoverage(df, group, text,
+          df.sparkSession.read.parquet(vocabPath), tokenCol = token))
     case "zipf-fit" =>
       val m = pMap(params.head)
       df => graft.operators.Curation.zipfFit(df, pStr(m("text")),
@@ -1671,19 +968,38 @@ object Engine {
       // hot-key-safe equi-join: big side scattered over salts, the
       // small artifact table replicated once per salt
       val m = pMap(params.head)
-      df => {
-        val small = df.sparkSession.read.parquet(pStr(m("small-path")))
-        graft.operators.Joins.saltedJoin(df, small, pStr(m("key")),
-          pLong(m("salts")).toInt, pStr(m("id")))
-      }
+      val (key, id, smallPath) = (pStr(m("key")), pStr(m("id")), pStr(m("small-path")))
+      val salts = pLong(m("salts"))
+      require(salts >= 1, "salted-join: salts must be >= 1")
+      Staged(
+        // the small table's columns join the shape only when it already exists
+        reads(key, id) { df =>
+          val small = try df.sparkSession.read.parquet(smallPath).schema
+            catch { case _: Throwable => StructType(Nil) }
+          withNulls(df, nullCols(small).filterNot { case (c, _) => df.columns.contains(c) })
+        },
+        df => graft.operators.Joins.saltedJoin(df, df.sparkSession.read.parquet(smallPath),
+          key, salts.toInt, id))
     case "bm25-query" =>
       // query frame in, ranked results out, against a persisted index
       val m = pMap(params.head)
-      df => graft.operators.Retrieval.queryBm25Index(df.sparkSession,
-        pStr(m("index-path")), df, pStr(m("id")), pStr(m("text")),
-        pLong(m("k")).toInt,
-        m.get("k1").map(pDouble).getOrElse(1.2),
-        m.get("b").map(pDouble).getOrElse(0.75))
+      val (id, text, indexPath, k) =
+        (pStr(m("id")), pStr(m("text")), pStr(m("index-path")), pLong(m("k")))
+      require(k >= 1, "bm25-query: k must be >= 1")
+      val (k1, b) =
+        (m.get("k1").map(pDouble).getOrElse(1.2), m.get("b").map(pDouble).getOrElse(0.75))
+      Staged(
+        reads(text) { df =>
+          // doc_id's type comes from the stored postings when they
+          // already exist, long otherwise
+          val docId = try df.sparkSession.read.parquet(s"$indexPath/postings").schema("id").dataType
+            catch { case _: Throwable => LongType }
+          emptyFrame(df.sparkSession, StructType(df.schema(id).copy(name = "query_id") +:
+            StructType.fromDDL("rank BIGINT NOT NULL").fields ++:
+            (StructField("doc_id", docId) +: StructType.fromDDL("score DOUBLE").fields)))
+        },
+        df => graft.operators.Retrieval.queryBm25Index(df.sparkSession, indexPath, df, id, text,
+          k.toInt, k1, b))
     case "dup-rate-estimate" =>
       // planning probe: reproducible duplicate-rate estimate from a
       // deterministic hash sample
@@ -1714,10 +1030,11 @@ object Engine {
     case "ks-drift" =>
       // exact two-sample KS vs a stored snapshot
       val m = pMap(params.head)
-      df => graft.operators.Curation.ksDrift(df,
-        df.sparkSession.read.parquet(pStr(m("other-path"))),
-        pStr(m("value")),
-        m.get("partitions").map(pLong(_).toInt).getOrElse(32))
+      val (value, otherPath) = (pStr(m("value")), pStr(m("other-path")))
+      val partitions = m.get("partitions").map(pLong(_).toInt).getOrElse(32)
+      Staged(fixed(graft.operators.Curation.KsDriftSchema, value),
+        df => graft.operators.Curation.ksDrift(df, df.sparkSession.read.parquet(otherPath),
+          value, partitions))
     case "quality-cascade" =>
       // ordered keep-condition stages; first rejector labels the doc.
       // params: [{"stages":[{"name":..., "keep": <condition>}], "mode":"label"|"filter"|"report"}]
@@ -1751,23 +1068,26 @@ object Engine {
       val m = pMap(params.head)
       df => graft.operators.Training.bestOfN(df,
         pStr(m("group")), pStr(m("id")), pStr(m("score")))
-    case "dedup-pair-eval" =>
+    case "dedup-pair-eval" | "dedup-pair-eval-sweep" =>
       // truth pairs from a parquet artifact; the stream is the PREDICTED
-      // pair list
+      // pair list, or for the sweep (the PR-curve face) the SCORED one
       val m = pMap(params.head)
-      df => graft.operators.Dedup.pairEval(df,
-        df.sparkSession.read.parquet(pStr(m("truth-path"))),
-        m.get("id1").map(pStr).getOrElse("id1"),
-        m.get("id2").map(pStr).getOrElse("id2"))
-    case "dedup-pair-eval-sweep" =>
-      // the PR-curve face: the stream is the SCORED pair list
-      val m = pMap(params.head)
-      df => graft.operators.Dedup.pairEvalSweep(df,
-        df.sparkSession.read.parquet(pStr(m("truth-path"))),
-        m("thresholds").asInstanceOf[Seq[Any]].map(pDouble),
-        m.get("id1").map(pStr).getOrElse("id1"),
-        m.get("id2").map(pStr).getOrElse("id2"),
-        m.get("score").map(pStr).getOrElse("score"))
+      val truthPath = pStr(m("truth-path"))
+      val (id1, id2) =
+        (m.get("id1").map(pStr).getOrElse("id1"), m.get("id2").map(pStr).getOrElse("id2"))
+      val report = nullCols(graft.operators.Dedup.PairEvalSchema)
+      if (action == "dedup-pair-eval")
+        Staged(reads(id1, id2)(df => withNulls(df.select(), report)),
+          df => graft.operators.Dedup.pairEval(df, df.sparkSession.read.parquet(truthPath),
+            id1, id2))
+      else {
+        val score = m.get("score").map(pStr).getOrElse("score")
+        val thresholds = m("thresholds").asInstanceOf[Seq[Any]].map(pDouble)
+        require(thresholds.nonEmpty, "dedup-pair-eval-sweep: empty threshold grid")
+        Staged(reads(id1, id2, score)(df => withNulls(df.select(lit(0.0).as("threshold")), report)),
+          df => graft.operators.Dedup.pairEvalSweep(df, df.sparkSession.read.parquet(truthPath),
+            thresholds, id1, id2, score))
+      }
     case "chunk-sentences" =>
       // boundary-respecting greedy chunking for retrieval
       val m = pMap(params.head)
@@ -1861,30 +1181,30 @@ object Engine {
         salt = m.get("salt").map(pStr).getOrElse("epochs"))
     case "decontam-overlap" =>
       val m = pMap(params.head)
-      df => {
-        val bench = df.sparkSession.read.parquet(pStr(m("bench-path")))
-        graft.operators.Decontam.overlapFraction(df, bench, pStr(m("id")), pStr(m("text")))
-      }
+      val (id, text, benchPath) = (pStr(m("id")), pStr(m("text")), pStr(m("bench-path")))
+      Staged(
+        reads(text)(df => withNulls(df.select(col(id)), graft.operators.Decontam.OverlapSchema)),
+        df => graft.operators.Decontam.overlapFraction(df,
+          df.sparkSession.read.parquet(benchPath), id, text))
     case "decontam-fuzzy" =>
       // drop train docs sharing any MinHash band with any bench doc
       val m = pMap(params.head)
-      df => {
-        val bench = df.sparkSession.read.parquet(pStr(m("bench-path")))
-        graft.operators.Decontam.decontaminateFuzzy(df, bench,
-          pStr(m("id")), pStr(m("text")),
-          m.get("k").map(pLong(_).toInt).getOrElse(8),
-          m.get("rows-per-band").map(pLong(_).toInt).getOrElse(2))
-      }
+      val (id, text, benchPath) = (pStr(m("id")), pStr(m("text")), pStr(m("bench-path")))
+      val (k, rowsPerBand) = (m.get("k").map(pLong(_).toInt).getOrElse(8),
+        m.get("rows-per-band").map(pLong(_).toInt).getOrElse(2))
+      Staged(reads(id, text)(identity),
+        df => graft.operators.Decontam.decontaminateFuzzy(df,
+          df.sparkSession.read.parquet(benchPath), id, text, k, rowsPerBand))
     case "decontam-exact" =>
       // drop train docs whose distinct-shingle overlap with the bench
       // corpus reaches min-hits (GPT-3 app. C's exact-n-gram rule)
       val m = pMap(params.head)
-      df => {
-        val bench = df.sparkSession.read.parquet(pStr(m("bench-path")))
-        graft.operators.Decontam.decontaminate(df, bench,
-          pStr(m("id")), pStr(m("text")),
-          m.get("min-hits").map(pLong).getOrElse(3L))
-      }
+      val (id, text, benchPath) = (pStr(m("id")), pStr(m("text")), pStr(m("bench-path")))
+      val minHits = m.get("min-hits").map(pLong).getOrElse(3L)
+      require(minHits >= 1, "decontam-exact: min-hits must be >= 1")
+      Staged(reads(id, text)(identity),
+        df => graft.operators.Decontam.decontaminate(df,
+          df.sparkSession.read.parquet(benchPath), id, text, minHits))
     case "gopher-filter" =>
       // keep only docs passing the Gopher quality thresholds — the
       // FILTER face of gopher-signals (which appends the struct)
@@ -1914,36 +1234,47 @@ object Engine {
         m.get("n").map(pLong(_).toInt).getOrElse(3),
         m.get("min-docs").map(pLong(_).toInt).getOrElse(2))
     case "train-logistic" =>
+      // the shape keeps validation total over the empty frame: an empty
+      // PRODUCTION training frame must stay a loud error in the trainer
       val m = pMap(params.head)
-      df => graft.operators.Training.trainLogistic(df, pStr(m("id")), pStr(m("vec")),
-        pStr(m("label")), pLong(m("dim")).toInt,
-        m.get("epochs").map(pLong(_).toInt).getOrElse(3),
-        m.get("lr").map(pDouble).getOrElse(0.5))
+      val (id, vec, label, dim) =
+        (pStr(m("id")), pStr(m("vec")), pStr(m("label")), pLong(m("dim")).toInt)
+      val (epochs, lr) =
+        (m.get("epochs").map(pLong(_).toInt).getOrElse(3), m.get("lr").map(pDouble).getOrElse(0.5))
+      Staged(fixed(graft.operators.Training.ModelSchema, id, vec, label),
+        df => graft.operators.Training.trainLogistic(df, id, vec, label, dim, epochs, lr))
     case "score-logistic" =>
       val m = pMap(params.head)
-      df => graft.operators.Training.scoreWithWeights(df, pStr(m("vec")),
-        graft.operators.Training.loadWeightsCached(df.sparkSession, pStr(m("model-path"))),
-        pStr(m("out")))
+      val (vec, modelPath, out) = (pStr(m("vec")), pStr(m("model-path")), pStr(m("out")))
+      Staged(reads(vec)(_.withColumn(out, lit(0.0))),
+        df => graft.operators.Training.scoreWithWeights(df, vec,
+          graft.operators.Training.loadWeightsCached(df.sparkSession, modelPath), out))
     case "dedup-delta" =>
       // incremental near-dup dedup against a persisted signature store
       val m = pMap(params.head)
-      df => {
-        // within-delta stage under the shared guard (connectivity face:
-        // capped == unlimited verdicts; audit records the pair-join
-        // exemptions the star edges stood in for)
-        val (out, audit) = graft.operators.IncrementalDedup.dedupDeltaAudited(df,
-          pStr(m("text")), pStr(m("id")), pStr(m("store-path")),
-          update = m.get("update").exists(_ == true),
-          cap = pBucketCap(m))
-        writeCapAudit(m, df.sparkSession, audit, connectivityExact = true)
-        out
-      }
+      val (text, id, storePath) = (pStr(m("text")), pStr(m("id")), pStr(m("store-path")))
+      val (update, cap) = (m.get("update").exists(_ == true), pBucketCap(m))
+      Staged(
+        reads(text)(df => withNulls(df.select(col(id)),
+          nullCols(graft.operators.IncrementalDedup.deltaSchema(id)).filterNot(_._1 == id))),
+        df => {
+          // within-delta stage under the shared guard (connectivity face:
+          // capped == unlimited verdicts; audit records the pair-join
+          // exemptions the star edges stood in for)
+          val (out, audit) = graft.operators.IncrementalDedup.dedupDeltaAudited(df,
+            text, id, storePath, update = update, cap = cap)
+          writeCapAudit(m, df.sparkSession, audit, connectivityExact = true)
+          out
+        })
     case "substring-probe" =>
       // incremental exact-substring cut spans against the persisted
       // window-hash store
       val m = pMap(params.head)
-      df => graft.operators.SubstringStore.probeDelta(df,
-        pStr(m("text")), pStr(m("id")), pStr(m("store-path")))
+      val (text, id, storePath) = (pStr(m("text")), pStr(m("id")), pStr(m("store-path")))
+      Staged(
+        reads(text)(df => withNulls(df.select(col(id)),
+          Seq("begin_tok", "end_tok", "n_tokens").map(_ -> LongType))),
+        df => graft.operators.SubstringStore.probeDelta(df, text, id, storePath))
     case "cluster-cap-sample" =>
       // topic-balanced subsample: at most `cap` docs per k-means cell
       val m = pMap(params.head)
@@ -2000,113 +1331,158 @@ object Engine {
       df => graft.operators.Multimodal.videoFrameTimes(df,
         pDouble(pMap(params.head)("fps")))
 
-    case "hard-negatives" =>
+    case "hard-negatives" | "hard-negatives-bucketed" =>
       // anchors arrive as a persisted artifact (the usual mining setup:
-      // the anchor batch is produced by an earlier sampling step)
-      val m = pMap(params.head)
-      df => graft.operators.Similarity.hardNegatives(df,
-        df.sparkSession.read.parquet(pStr(m("anchors-path"))),
-        pStr(m("id")), pStr(m("vec")), pStr(m("label")), pLong(m("k")).toInt)
-    case "hard-negatives-bucketed" =>
-      // the web-scale composed miner: same artifact rule, sign-bucket
+      // the anchor batch is produced by an earlier sampling step); the
+      // bucketed face is the web-scale composed miner, a sign-bucket
       // candidate set instead of the full corpus scan
       val m = pMap(params.head)
-      df => graft.operators.Similarity.hardNegativesBucketed(df,
-        df.sparkSession.read.parquet(pStr(m("anchors-path"))),
-        pStr(m("id")), pStr(m("vec")), pStr(m("label")), pLong(m("k")).toInt,
-        bits = m.get("bits").map(pLong(_).toInt).getOrElse(16),
-        extraProbes = m.get("probes").map(pLong(_).toInt).getOrElse(0))
+      val (id, vec, label, anchorsPath, k) = (pStr(m("id")), pStr(m("vec")), pStr(m("label")),
+        pStr(m("anchors-path")), pLong(m("k")).toInt)
+      val (bits, probes) = (m.get("bits").map(pLong(_).toInt).getOrElse(16),
+        m.get("probes").map(pLong(_).toInt).getOrElse(0))
+      Staged(fixed(graft.operators.Similarity.HardNegSchema, id, vec, label), df => {
+        val anchors = df.sparkSession.read.parquet(anchorsPath)
+        if (action == "hard-negatives")
+          graft.operators.Similarity.hardNegatives(df, anchors, id, vec, label, k)
+        else graft.operators.Similarity.hardNegativesBucketed(df, anchors, id, vec, label, k,
+          bits = bits, extraProbes = probes)
+      })
 
     // example-selection / data-pruning family (Pruning.scala)
     case "el2n-scores" =>
-      // probe-model artifact rule (same as score-logistic): adds
-      // el2n + grand map-side under broadcast cached weights
+      // probe-model artifact (as score-logistic): adds el2n + grand
+      // map-side under broadcast cached weights
       val m = pMap(params.head)
-      df => graft.operators.Pruning.difficultyScoresWithWeights(df,
-        pStr(m("vec")), pStr(m("label")),
-        graft.operators.Training.loadWeightsCached(df.sparkSession, pStr(m("model-path"))))
-    case "prototype-ranks" =>
-      // centroid artifact rule (the kmeans-assign discipline)
+      val (vec, label, modelPath) = (pStr(m("vec")), pStr(m("label")), pStr(m("model-path")))
+      Staged(reads(vec, label)(_.withColumn("el2n", lit(0.0)).withColumn("grand", lit(0.0))),
+        df => graft.operators.Pruning.difficultyScoresWithWeights(df, vec, label,
+          graft.operators.Training.loadWeightsCached(df.sparkSession, modelPath)))
+    case "prototype-ranks" | "cluster-prune" =>
+      // centroid artifact (the kmeans-assign discipline)
       val m = pMap(params.head)
-      df => graft.operators.Pruning.prototypeRanks(df, pStr(m("id")), pStr(m("vec")),
-        graft.operators.Similarity.loadCentroids(df.sparkSession, pStr(m("centroids-path"))))
-    case "cluster-prune" =>
-      val m = pMap(params.head)
-      df => graft.operators.Pruning.clusterPrune(df, pStr(m("id")), pStr(m("vec")),
-        graft.operators.Similarity.loadCentroids(df.sparkSession, pStr(m("centroids-path"))),
-        pLong(m("per-cluster")).toInt,
-        keepHard = m.get("keep-hard").exists(_.asInstanceOf[Boolean]))
+      val (id, vec, centroidsPath) = (pStr(m("id")), pStr(m("vec")), pStr(m("centroids-path")))
+      val ranks = action == "prototype-ranks"
+      val perCluster = if (ranks) 0L else pLong(m("per-cluster"))
+      require(ranks || perCluster >= 1, "cluster-prune: per-cluster must be >= 1")
+      val keepHard = m.get("keep-hard").exists(_.asInstanceOf[Boolean])
+      Staged(
+        reads(vec) { df =>
+          val out = df.select(col(id)).withColumn("cell", lit(0L)).withColumn("cosine", lit(0.0))
+          if (ranks) out.withColumn("proto_rank", lit(0)) else out
+        },
+        df => {
+          val centroids = graft.operators.Similarity.loadCentroids(df.sparkSession, centroidsPath)
+          if (ranks) graft.operators.Pruning.prototypeRanks(df, id, vec, centroids)
+          else graft.operators.Pruning.clusterPrune(df, id, vec, centroids, perCluster.toInt,
+            keepHard = keepHard)
+        })
     case "kcenter-coreset" =>
       val m = pMap(params.head)
-      df => graft.operators.Pruning.kcenterGreedy(df, pStr(m("id")), pStr(m("vec")),
-        pLong(m("k")).toInt)
+      val (id, vec, k) = (pStr(m("id")), pStr(m("vec")), pLong(m("k")))
+      require(k >= 1, "kcenter-coreset: k must be >= 1")
+      Staged(fixed(graft.operators.Pruning.KcenterSchema, id, vec),
+        df => graft.operators.Pruning.kcenterGreedy(df, id, vec, k.toInt))
     case "cartography" =>
-      // trace artifact rule: the per-epoch weight snapshots come from a
-      // persisted trainLogisticExactTrace frame
+      // the per-epoch weight snapshots come from a persisted
+      // trainLogisticExactTrace frame
       val m = pMap(params.head)
-      df => graft.operators.Pruning.cartography(df, pStr(m("vec")), pStr(m("label")),
-        df.sparkSession.read.parquet(pStr(m("trace-path"))))
+      val (vec, label, tracePath) = (pStr(m("vec")), pStr(m("label")), pStr(m("trace-path")))
+      Staged(
+        reads(vec, label)(_.withColumn("confidence", lit(0.0)).withColumn("variability", lit(0.0))
+          .withColumn("correct_frac", lit(0.0)).withColumn("region", lit("ambiguous"))),
+        df => graft.operators.Pruning.cartography(df, vec, label,
+          df.sparkSession.read.parquet(tracePath)))
     case "mmr-rerank" =>
       // diversity-aware final ranking over a candidate frame
       val m = pMap(params.head)
-      df => graft.operators.Retrieval.mmrRerank(df, pStr(m("query")), pStr(m("id")),
-        pStr(m("rel")), pStr(m("vec")), pLong(m("k")).toInt,
-        m.get("lambda").map(pDouble).getOrElse(0.5))
+      val k = pLong(m("k"))
+      require(k >= 1, "mmr-rerank: k must be >= 1")
+      val lambda = m.get("lambda").map(pDouble).getOrElse(0.5)
+      require(lambda >= 0.0 && lambda <= 1.0, "mmr-rerank: lambda must be in [0,1]")
+      val (query, id, rel, vec) = (pStr(m("query")), pStr(m("id")), pStr(m("rel")), pStr(m("vec")))
+      Staged(
+        // fixed output types: the operator casts query/id to long
+        reads(rel, vec)(_.select(col(query).cast("long")).withColumn("mmr_rank", lit(0))
+          .withColumn(id, lit(0L)).withColumn("mmr_score", lit(0.0))),
+        df => graft.operators.Retrieval.mmrRerank(df, query, id, rel, vec, k.toInt, lambda))
     case "jaccard-join" =>
       // exact prefix-filtered similarity join (recall 1.0)
       val m = pMap(params.head)
-      df => graft.operators.Dedup.jaccardPrefixJoin(df, pStr(m("id")), pStr(m("text")),
-        pDouble(m("threshold")))
+      val (id, text, threshold) = (pStr(m("id")), pStr(m("text")), pDouble(m("threshold")))
+      require(threshold > 0.0 && threshold < 1.0, "jaccard-join: threshold must be in (0,1)")
+      Staged(reads(text)(pairShape(id, "jaccard DOUBLE")),
+        df => graft.operators.Dedup.jaccardPrefixJoin(df, id, text, threshold))
     case "bootstrap-ci" =>
       // percentile-bootstrap CI of a metric mean per group (Poisson
       // weights — one corpus pass, groups x r exchange)
       val m = pMap(params.head)
-      df => graft.operators.Bootstrap.confidenceInterval(df,
-        pStr(m("val")), pStr(m("id")), pStrs(m("group")),
-        r = m.get("r").map(pLong(_).toInt).getOrElse(100),
-        alpha = m.get("alpha").map(pDouble).getOrElse(0.05),
-        salt = m.get("salt").map(pStr).getOrElse("bs"))
+      val groups = pStrs(m("group"))
+      require(groups.nonEmpty, "bootstrap-ci: group must be non-empty")
+      val alpha = m.get("alpha").map(pDouble).getOrElse(0.05)
+      require(alpha > 0.0 && alpha < 1.0, "bootstrap-ci: alpha must be in (0,1)")
+      val r = m.get("r").map(pLong).getOrElse(100L)
+      require(r >= 1, "bootstrap-ci: r must be >= 1")
+      val (value, id) = (pStr(m("val")), pStr(m("id")))
+      val salt = m.get("salt").map(pStr).getOrElse("bs")
+      Staged(
+        reads(value, id)(_.select(groups.map(col): _*).withColumn("n", lit(0L))
+          .withColumn("point", lit(0.0)).withColumn("ci_lo", lit(0.0))
+          .withColumn("ci_hi", lit(0.0))),
+        df => graft.operators.Bootstrap.confidenceInterval(df, value, id, groups,
+          r = r.toInt, alpha = alpha, salt = salt))
     case "winnow-fingerprints" =>
       // MOSS winnowing: per-doc local fingerprints (map-side fold)
       val m = pMap(params.head)
-      df => graft.operators.Dedup.winnowFingerprints(df, pStr(m("text")), pStr(m("id")),
-        k = m.get("k").map(pLong(_).toInt).getOrElse(5),
-        w = m.get("w").map(pLong(_).toInt).getOrElse(4))
+      val (k, w) = (m.get("k").map(pLong).getOrElse(5L), m.get("w").map(pLong).getOrElse(4L))
+      require(k >= 1, "winnow-fingerprints: k must be >= 1")
+      require(w >= 1, "winnow-fingerprints: w must be >= 1")
+      val (id, text) = (pStr(m("id")), pStr(m("text")))
+      Staged(
+        reads(text)(df => emptyFrame(df.sparkSession,
+          StructType(df.schema(id) +: StructType.fromDDL("pos BIGINT, fp BIGINT").fields))),
+        df => graft.operators.Dedup.winnowFingerprints(df, text, id, k = k.toInt, w = w.toInt))
     case "winnow-candidates" =>
       // shared-fingerprint near-dup pairs (local-overlap complement of LSH)
       val m = pMap(params.head)
-      df => graft.operators.Dedup.winnowCandidates(df, pStr(m("text")), pStr(m("id")),
-        k = m.get("k").map(pLong(_).toInt).getOrElse(5),
-        w = m.get("w").map(pLong(_).toInt).getOrElse(4),
-        minShared = m.get("min-shared").map(pLong(_).toInt).getOrElse(2),
-        maxDf = m.get("max-df").map(pLong(_).toInt).getOrElse(50))
+      val minShared = m.get("min-shared").map(pLong).getOrElse(2L)
+      require(minShared >= 1, "winnow-candidates: min-shared must be >= 1")
+      val maxDf = m.get("max-df").map(pLong).getOrElse(50L)
+      require(maxDf >= 2, "winnow-candidates: max-df must be >= 2")
+      val (id, text) = (pStr(m("id")), pStr(m("text")))
+      val (k, w) =
+        (m.get("k").map(pLong(_).toInt).getOrElse(5), m.get("w").map(pLong(_).toInt).getOrElse(4))
+      Staged(reads(text)(pairShape(id, "shared BIGINT")),
+        df => graft.operators.Dedup.winnowCandidates(df, text, id, k = k, w = w,
+          minShared = minShared.toInt, maxDf = maxDf.toInt))
     case "edit-confirm" =>
       // composed near-dup funnel: LSH candidates -> optional n-gram
       // Jaccard cut (min-jaccard; keeps the quadratic DP off raw LSH
-      // bucket collisions) -> bounded Levenshtein alignment confirm
+      // bucket collisions) -> bounded Levenshtein alignment confirm.
+      // Declares its shape: over an empty frame the builder would still
+      // resolve the bucket cap and write its audit-path parquet
       val m = pMap(params.head)
-      df => {
-        val kk = m.get("k").map(pLong(_).toInt).getOrElse(8)
-        val rpb = m.get("rows-per-band").map(pLong(_).toInt).getOrElse(2)
-        val mj = m.get("min-jaccard").map(pDouble).getOrElse(0.0)
-        val ml = m.get("max-len").map(pLong(_).toInt).getOrElse(512)
-        val cap = pBucketCap(m)
-        if (mj > 0.0) {
+      val (id, text, minSim) = (pStr(m("id")), pStr(m("text")), pDouble(m("min-sim")))
+      require(minSim >= 0.0 && minSim <= 1.0, "edit-confirm: min-sim must be in [0,1]")
+      val maxLen = m.get("max-len").map(pLong).getOrElse(512L)
+      require(maxLen >= 1, "edit-confirm: max-len must be >= 1")
+      val (k, rowsPerBand) = (m.get("k").map(pLong(_).toInt).getOrElse(8),
+        m.get("rows-per-band").map(pLong(_).toInt).getOrElse(2))
+      val (minJaccard, cap) = (m.get("min-jaccard").map(pDouble).getOrElse(0.0), pBucketCap(m))
+      Staged(reads(text)(pairShape(id, "edit_dist BIGINT, edit_sim DOUBLE")), df =>
+        if (minJaccard > 0.0) {
           // fused single-pass funnel: one payload table, two id-joins
-          val (out, audit) = graft.operators.Dedup.editConfirmFunnelAudited(
-            df, pStr(m("text")), pStr(m("id")),
-            minJaccard = mj, minSim = pDouble(m("min-sim")), maxLen = ml,
-            k = kk, rowsPerBand = rpb, cap = cap)
+          val (out, audit) = graft.operators.Dedup.editConfirmFunnelAudited(df, text, id,
+            minJaccard = minJaccard, minSim = minSim, maxLen = maxLen.toInt,
+            k = k, rowsPerBand = rowsPerBand, cap = cap)
           writeCapAudit(m, df.sparkSession, audit)
           out
         } else {
-          val (cands, audit) = graft.operators.Dedup.lshCandidatesAudited(
-            df, pStr(m("text")), pStr(m("id")), k = kk, rowsPerBand = rpb, cap = cap)
+          val (cands, audit) = graft.operators.Dedup.lshCandidatesAudited(df, text, id,
+            k = k, rowsPerBand = rowsPerBand, cap = cap)
           writeCapAudit(m, df.sparkSession, audit)
-          graft.operators.Dedup.editConfirm(df, cands,
-            pStr(m("text")), pStr(m("id")), pDouble(m("min-sim")), ml)
-        }
-      }
+          graft.operators.Dedup.editConfirm(df, cands, text, id, minSim, maxLen.toInt)
+        })
     case "cluster-split" =>
       // leakage-free train/val/test: LSH pairs -> star-contraction
       // roots -> hash split of the ROOT (near-dup clusters atomic)
@@ -2135,49 +1511,42 @@ object Engine {
       val m = pMap(params.head)
       df => graft.operators.Curation.shrunkGroupMeans(df, pStr(m("group")),
         pStr(m("value")), pDouble(m("pseudo-count")))
-    case "ivfpq-build" =>
-      // sink-like: persist the index (train + encode, cell-partitioned
-      // codes) and pass the corpus through unchanged
+    case "ivfpq-build" | "ivfpq-append" | "opq-build" =>
+      // sink-like: persist the index and pass the corpus through
+      // unchanged. ivfpq-build trains + encodes cell-partitioned codes,
+      // ivfpq-append encodes the delta against the FROZEN stored model,
+      // opq-build trains the OPQ rotation + codebooks over flat codes
       val m = pMap(params.head)
-      df => {
-        graft.operators.Similarity.buildIvfPqIndex(df, pStr(m("id")), pStr(m("vec")),
-          pStr(m("path")), m.get("cells").map(pLong(_).toInt).getOrElse(16),
-          m.get("m").map(pLong(_).toInt).getOrElse(4),
-          m.get("codes").map(pLong(_).toInt).getOrElse(16))
-        df
+      val (id, vec, path) = (pStr(m("id")), pStr(m("vec")), pStr(m("path")))
+      def opt(key: String, default: Int) = m.get(key).map(pLong(_).toInt).getOrElse(default)
+      val write: DataFrame => Unit = action match {
+        case "ivfpq-build" =>
+          val (cells, sub, codes) = (opt("cells", 16), opt("m", 4), opt("codes", 16))
+          graft.operators.Similarity.buildIvfPqIndex(_, id, vec, path, cells, sub, codes)
+        case "ivfpq-append" =>
+          graft.operators.Similarity.appendIvfPqIndex(_, id, vec, path)
+        case _ =>
+          val (sub, codes, iters) = (opt("m", 4), opt("codes", 16), opt("iters", 3))
+          graft.operators.Similarity.buildOpqIndex(_, id, vec, path, sub, codes, iters)
       }
-    case "ivfpq-append" =>
-      // sink-like: encode the delta against the FROZEN stored model and
-      // append its codes; corpus passes through unchanged
+      Staged(reads(id, vec)(identity), df => { write(df); df })
+    case "ivfpq-query" | "opq-query" =>
+      // the input frame is the query batch; the corpus is the stored
+      // index (IVF-PQ cells, or OPQ flat codes)
       val m = pMap(params.head)
-      df => {
-        graft.operators.Similarity.appendIvfPqIndex(df, pStr(m("id")), pStr(m("vec")),
-          pStr(m("path")))
-        df
-      }
-    case "ivfpq-query" =>
-      // the input frame is the query batch; the corpus is the stored index
-      val m = pMap(params.head)
-      df => graft.operators.Similarity.queryIvfPqIndex(df.sparkSession,
-        pStr(m("index-path")), df, pStr(m("id")), pStr(m("vec")),
-        pLong(m("k")).toInt, m.get("probes").map(pLong(_).toInt).getOrElse(4))
-    case "opq-build" =>
-      // sink-like: train the OPQ rotation + codebooks, persist model and
-      // flat codes, pass the corpus through unchanged
-      val m = pMap(params.head)
-      df => {
-        graft.operators.Similarity.buildOpqIndex(df, pStr(m("id")), pStr(m("vec")),
-          pStr(m("path")), m.get("m").map(pLong(_).toInt).getOrElse(4),
-          m.get("codes").map(pLong(_).toInt).getOrElse(16),
-          m.get("iters").map(pLong(_).toInt).getOrElse(3))
-        df
-      }
-    case "opq-query" =>
-      // input frame = query batch; corpus = the stored flat codes
-      val m = pMap(params.head)
-      df => graft.operators.Similarity.queryOpqIndex(df.sparkSession,
-        pStr(m("index-path")), df, pStr(m("id")), pStr(m("vec")),
-        pLong(m("k")).toInt)
+      val (id, vec, indexPath, k) =
+        (pStr(m("id")), pStr(m("vec")), pStr(m("index-path")), pLong(m("k")))
+      require(k >= 1, s"$action: k must be >= 1")
+      val probes = m.get("probes").map(pLong(_).toInt).getOrElse(4)
+      Staged(
+        reads(id, vec)(_.select(col(id).cast("long").as("query_id")).withColumn("rank", lit(0L))
+          .withColumn("nn_id", lit(0L)).withColumn("score", lit(0.0))),
+        df =>
+          if (action == "ivfpq-query")
+            graft.operators.Similarity.queryIvfPqIndex(df.sparkSession, indexPath, df, id, vec,
+              k.toInt, probes)
+          else graft.operators.Similarity.queryOpqIndex(df.sparkSession, indexPath, df, id, vec,
+            k.toInt))
 
     case "url-canonicalize" =>
       val m = pMap(params.head)
@@ -2192,57 +1561,65 @@ object Engine {
           graft.operators.Tokenizer.wordCounts(df, pStr(m("text")))))
     case "pca-train" =>
       val m = pMap(params.head)
-      df => {
-        val spark = df.sparkSession
-        import spark.implicits._
-        val model = graft.operators.Pca.fit(df, pStr(m("vec")),
-          pLong(m("dim")).toInt, pLong(m("k")).toInt)
-        graft.operators.Pca.saveModel(spark, model, pStr(m("path")))
-        model.components.zipWithIndex.map { case (row, r) =>
-          (r, model.eigVals(r), row.toSeq)
-        }.toSeq.toDF("component", "eig_val", "row")
-      }
-    case "pca-whiten" =>
+      val (vec, dim, k, path) =
+        (pStr(m("vec")), pLong(m("dim")).toInt, pLong(m("k")).toInt, pStr(m("path")))
+      Staged(
+        fixed(StructType.fromDDL(
+          "component INT NOT NULL, eig_val DOUBLE NOT NULL, `row` ARRAY<DOUBLE>"), vec),
+        df => {
+          val spark = df.sparkSession
+          import spark.implicits._
+          val model = graft.operators.Pca.fit(df, vec, dim, k)
+          graft.operators.Pca.saveModel(spark, model, path)
+          model.components.zipWithIndex.map { case (row, r) =>
+            (r, model.eigVals(r), row.toSeq)
+          }.toSeq.toDF("component", "eig_val", "row")
+        })
+    case "pca-whiten" | "pca-project" =>
       val m = pMap(params.head)
-      df => graft.operators.Pca.whiten(df, pStr(m("vec")), pStr(m("out")),
-        graft.operators.Pca.loadModel(df.sparkSession, pStr(m("model-path"))),
-        m.get("eps").map(pDouble).getOrElse(1e-9))
-    case "pca-project" =>
-      val m = pMap(params.head)
-      df => graft.operators.Pca.project(df, pStr(m("vec")), pStr(m("out")),
-        graft.operators.Pca.loadModel(df.sparkSession, pStr(m("model-path"))))
+      val (vec, modelPath, out) = (pStr(m("vec")), pStr(m("model-path")), pStr(m("out")))
+      val eps = m.get("eps").map(pDouble).getOrElse(1e-9)
+      Staged(reads(vec)(_.withColumn(out, array().cast("array<double>"))), df => {
+        val model = graft.operators.Pca.loadModel(df.sparkSession, modelPath)
+        if (action == "pca-whiten") graft.operators.Pca.whiten(df, vec, out, model, eps)
+        else graft.operators.Pca.project(df, vec, out, model)
+      })
     case "ngram-train" =>
       val m = pMap(params.head)
-      df => {
-        graft.operators.NgramLm.train(df, pStr(m("text")),
-          pLong(m("n")).toInt, pDouble(m("alpha")), pStr(m("path")))
-        graft.operators.NgramLm.loadModel(df.sparkSession, pStr(m("path"))).counts
-      }
-    case "ngram-score" =>
+      val (text, n, alpha, path) =
+        (pStr(m("text")), pLong(m("n")).toInt, pDouble(m("alpha")), pStr(m("path")))
+      Staged(fixed(graft.operators.NgramLm.CountsSchema, text), df => {
+        graft.operators.NgramLm.train(df, text, n, alpha, path)
+        graft.operators.NgramLm.loadModel(df.sparkSession, path).counts
+      })
+    case "ngram-score" | "kn-score" | "sb-score" =>
       val m = pMap(params.head)
-      df => graft.operators.NgramLm.score(df, pStr(m("text")), pStr(m("id")),
-        graft.operators.NgramLm.loadModel(df.sparkSession, pStr(m("model-path"))))
+      val (text, id, modelPath) = (pStr(m("text")), pStr(m("id")), pStr(m("model-path")))
+      val beta = m.get("beta").map(pDouble).getOrElse(0.4)
+      Staged(
+        reads(text, id)(_.withColumn("n_scored", lit(0L)).withColumn("logprob", lit(0.0))
+          .withColumn("cross_entropy", lit(0.0)).withColumn("ppl", lit(0.0))),
+        action match {
+          case "ngram-score" => df => graft.operators.NgramLm.score(df, text, id,
+            graft.operators.NgramLm.loadModel(df.sparkSession, modelPath))
+          case "kn-score" => df => graft.operators.NgramLm.scoreKneserNey(df, text, id,
+            graft.operators.NgramLm.loadKneserNey(df.sparkSession, modelPath))
+          case _ => df => {
+            // reuses the ngram-train artifact (counts + vocab_size; order 2)
+            val lm = graft.operators.NgramLm.loadModel(df.sparkSession, modelPath)
+            require(lm.n == 2, s"sb-score: needs an order-2 model, got n=${lm.n}")
+            graft.operators.NgramLm.scoreStupidBackoff(df, text, id, lm.counts, lm.vocabSize, beta)
+          }
+        })
     case "kn-train" =>
       val m = pMap(params.head)
-      df => {
-        val model = graft.operators.NgramLm.trainKneserNey(df, pStr(m("text")),
-          m.get("discount").map(pDouble).getOrElse(0.75))
-        graft.operators.NgramLm.saveKneserNey(model, pStr(m("path")))
+      val (text, path) = (pStr(m("text")), pStr(m("path")))
+      val discount = m.get("discount").map(pDouble).getOrElse(0.75)
+      Staged(fixed(graft.operators.NgramLm.CountsSchema, text), df => {
+        val model = graft.operators.NgramLm.trainKneserNey(df, text, discount)
+        graft.operators.NgramLm.saveKneserNey(model, path)
         model.counts
-      }
-    case "sb-score" =>
-      // reuses the ngram-train artifact (counts + vocab_size; order 2)
-      val m = pMap(params.head)
-      df => {
-        val lm = graft.operators.NgramLm.loadModel(df.sparkSession, pStr(m("model-path")))
-        require(lm.n == 2, s"sb-score: needs an order-2 model, got n=${lm.n}")
-        graft.operators.NgramLm.scoreStupidBackoff(df, pStr(m("text")), pStr(m("id")),
-          lm.counts, lm.vocabSize, m.get("beta").map(pDouble).getOrElse(0.4))
-      }
-    case "kn-score" =>
-      val m = pMap(params.head)
-      df => graft.operators.NgramLm.scoreKneserNey(df, pStr(m("text")), pStr(m("id")),
-        graft.operators.NgramLm.loadKneserNey(df.sparkSession, pStr(m("model-path"))))
+      })
     case "ppl-bucket" =>
       val m = pMap(params.head)
       df => graft.operators.NgramLm.pplBucket(df, pStr(m("id")), pStr(m("ppl")),
@@ -2264,13 +1641,16 @@ object Engine {
         m.get("salt").map(pStr).getOrElse("unimax"))
     case "cms-topk" =>
       val m = pMap(params.head)
-      df => graft.operators.Sketches.cmsTokenCounts(df, pStr(m("text")),
-        pLong(m("depth")).toInt, pLong(m("width")).toInt,
-        m.get("seed").map(pStr).getOrElse("cms"), pLong(m("k")).toInt)
+      val (text, depth, width, k) =
+        (pStr(m("text")), pLong(m("depth")).toInt, pLong(m("width")).toInt, pLong(m("k")).toInt)
+      val seed = m.get("seed").map(pStr).getOrElse("cms")
+      Staged(fixed(StructType.fromDDL("token STRING, est BIGINT NOT NULL"), text),
+        df => graft.operators.Sketches.cmsTokenCounts(df, text, depth, width, seed, k))
     case "heavy-hitters" =>
       val m = pMap(params.head)
-      df => graft.operators.Sketches.heavyHitters(df, pStr(m("text")),
-        pLong(m("k")).toInt)
+      val (text, k) = (pStr(m("text")), pLong(m("k")).toInt)
+      Staged(fixed(StructType.fromDDL("token STRING, cnt BIGINT NOT NULL"), text),
+        df => graft.operators.Sketches.heavyHitters(df, text, k))
     case "kmv-sample" =>
       val m = pMap(params.head)
       df => graft.operators.Sketches.kmvRowSample(df, pStr(m("id")),
@@ -2278,97 +1658,116 @@ object Engine {
         m.get("seed").map(pStr).getOrElse("kmv"))
     case "kmv-quantiles" =>
       val m = pMap(params.head)
-      df => graft.operators.Sketches.kmvQuantiles(df, pStr(m("id")),
-        pStr(m("value")), pLong(m("k")).toInt,
-        m.get("seed").map(pStr).getOrElse("kmv"), pDoubles(m("qs")))
+      val (id, value, k, qs) =
+        (pStr(m("id")), pStr(m("value")), pLong(m("k")).toInt, pDoubles(m("qs")))
+      val seed = m.get("seed").map(pStr).getOrElse("kmv")
+      Staged(fixed(StructType.fromDDL("q DOUBLE NOT NULL, value DOUBLE NOT NULL"), id, value),
+        df => graft.operators.Sketches.kmvQuantiles(df, id, value, k, seed, qs))
     case "kmv-distinct" =>
       val m = pMap(params.head)
-      df => graft.operators.Sketches.kmvDistinct(df, pStr(m("text")),
-        pLong(m("k")).toInt, m.get("seed").map(pStr).getOrElse("kmv"))
+      val (text, k) = (pStr(m("text")), pLong(m("k")).toInt)
+      val seed = m.get("seed").map(pStr).getOrElse("kmv")
+      Staged(
+        fixed(StructType.fromDDL("k_kept BIGINT NOT NULL, h_k BIGINT NOT NULL, est DOUBLE NOT NULL"),
+          text),
+        df => graft.operators.Sketches.kmvDistinct(df, text, k, seed))
     case "pagerank" =>
       val m = pMap(params.head)
-      df => graft.operators.LinkGraph.pageRank(df, pStr(m("src")), pStr(m("dst")),
-        m.get("iters").map(pLong(_).toInt).getOrElse(10),
+      val (src, dst) = (pStr(m("src")), pStr(m("dst")))
+      val (iters, damping) = (m.get("iters").map(pLong(_).toInt).getOrElse(10),
         m.get("damping").map(pDouble).getOrElse(0.85))
+      Staged(fixed(StructType.fromDDL("node STRING, rank DOUBLE NOT NULL"), src, dst),
+        df => graft.operators.LinkGraph.pageRank(df, src, dst, iters, damping))
     case "hits" =>
       // hubs & authorities over an edge frame (eager power iteration)
       val m = pMap(params.head)
-      df => graft.operators.LinkGraph.hits(df, pStr(m("src")), pStr(m("dst")),
-        m.get("iters").map(pLong(_).toInt).getOrElse(5))
-    case "doremi-weights" =>
+      val (src, dst) = (pStr(m("src")), pStr(m("dst")))
+      val iters = m.get("iters").map(pLong).getOrElse(5L)
+      require(iters >= 1, "hits: iters must be >= 1")
+      Staged(
+        fixed(StructType.fromDDL("node STRING, auth DOUBLE NOT NULL, hub DOUBLE NOT NULL"), src, dst),
+        df => graft.operators.LinkGraph.hits(df, src, dst, iters.toInt))
+    case "doremi-weights" | "doremi-reweight" =>
       val m = pMap(params.head)
-      df => graft.operators.Doremi.weights(df, pStr(m("domain")),
-        col(pStr(m("loss"))).cast("double"), lit(pDouble(m("ref"))),
-        m.get("eta").map(pDouble).getOrElse(1.0),
+      val (domain, loss, ref) = (pStr(m("domain")), pStr(m("loss")), pDouble(m("ref")))
+      val (eta, rounds, smoothing) = (m.get("eta").map(pDouble).getOrElse(1.0),
         m.get("rounds").map(pLong(_).toInt).getOrElse(1),
         m.get("smoothing").map(pDouble).getOrElse(0.0))
-    case "doremi-reweight" =>
-      val m = pMap(params.head)
-      df => graft.operators.Doremi.reweight(df, pStr(m("domain")),
-        pStr(m("id")), col(pStr(m("loss"))).cast("double"), lit(pDouble(m("ref"))),
-        m.get("eta").map(pDouble).getOrElse(1.0),
-        m.get("rounds").map(pLong(_).toInt).getOrElse(1),
-        m.get("smoothing").map(pDouble).getOrElse(0.0),
-        m.get("salt").map(pStr).getOrElse("doremi"))
+      if (action == "doremi-weights")
+        Staged(
+          fixed(StructType.fromDDL(
+            "domain STRING, n BIGINT NOT NULL, excess DOUBLE NOT NULL, weight DOUBLE"),
+            domain, loss),
+          df => graft.operators.Doremi.weights(df, domain, col(loss).cast("double"), lit(ref),
+            eta, rounds, smoothing))
+      else {
+        val (id, salt) = (pStr(m("id")), m.get("salt").map(pStr).getOrElse("doremi"))
+        Staged(reads(domain, loss, id)(_.withColumn("copy", lit(0L))),
+          df => graft.operators.Doremi.reweight(df, domain, id, col(loss).cast("double"), lit(ref),
+            eta, rounds, smoothing, salt))
+      }
     case "hll-registers" =>
       val m = pMap(params.head)
       df => graft.operators.Sketches.hllRegisters(df, pStr(m("text")),
         pLong(m("b")).toInt, m.get("seed").map(pStr).getOrElse("hll"))
     case "hll-distinct" =>
       val m = pMap(params.head)
-      df => graft.operators.Sketches.hllDistinct(df, pStr(m("text")),
-        pLong(m("b")).toInt, m.get("seed").map(pStr).getOrElse("hll"))
+      val (text, b) = (pStr(m("text")), pLong(m("b")).toInt)
+      val seed = m.get("seed").map(pStr).getOrElse("hll")
+      Staged(
+        fixed(StructType.fromDDL("m BIGINT NOT NULL, n_zero BIGINT NOT NULL, est DOUBLE NOT NULL"),
+          text),
+        df => graft.operators.Sketches.hllDistinct(df, text, b, seed))
     case "bpe-train" =>
       val m = pMap(params.head)
       // batched driver loop by default (exactly equal to sequential;
       // `batch 1` recovers the one-merge-per-job reference path)
-      df => graft.operators.Tokenizer.trainBpeBatched(df, pStr(m("text")),
-        pLong(m("merges")).toInt,
-        m.get("min-pair").map(pLong).getOrElse(2L),
+      val (text, merges) = (pStr(m("text")), pLong(m("merges")).toInt)
+      val (minPair, batch) = (m.get("min-pair").map(pLong).getOrElse(2L),
         m.get("batch").map(pLong(_).toInt).getOrElse(16))
-    case "bpe-encode" =>
+      Staged(fixed(graft.operators.Tokenizer.MergesSchema, text),
+        df => graft.operators.Tokenizer.trainBpeBatched(df, text, merges, minPair, batch))
+    case "bpe-encode" | "unigram-encode" | "wordpiece-encode" =>
+      // the model table is a runtime artifact (a *-train step earlier in
+      // the job may produce it)
       val m = pMap(params.head)
-      df => graft.operators.Tokenizer.encode(df, pStr(m("text")),
-        graft.operators.Tokenizer.loadMerges(df.sparkSession, pStr(m("model-path"))),
-        pStr(m("out")))
+      val (text, modelPath, out) = (pStr(m("text")), pStr(m("model-path")), pStr(m("out")))
+      Staged(reads(text)(_.withColumn(out, array().cast("array<string>"))), action match {
+        case "bpe-encode" => df => graft.operators.Tokenizer.encode(df, text,
+          graft.operators.Tokenizer.loadMerges(df.sparkSession, modelPath), out)
+        case "unigram-encode" =>
+          val maxPiece = m.get("max-piece").map(pLong(_).toInt).getOrElse(8)
+          df => graft.operators.UnigramTokenizer.encode(df, text,
+            graft.operators.UnigramTokenizer.loadModel(df.sparkSession, modelPath), out, maxPiece)
+        case _ =>
+          val unk = m.get("unk").map(pStr).getOrElse("[UNK]")
+          df => graft.operators.WordPiece.encode(df, text,
+            graft.operators.WordPiece.loadVocab(df.sparkSession, modelPath), out, unk)
+      })
     case "unigram-train" =>
       val m = pMap(params.head)
       val mode = m.get("mode").map(pStr).getOrElse("hard")
-      mode match {
-        case "hard" =>
-          df => graft.operators.UnigramTokenizer.trainDistributed(df, pStr(m("text")),
-            pLong(m("vocab")).toInt,
-            m.get("max-piece").map(pLong(_).toInt).getOrElse(8),
-            m.get("iters").map(pLong(_).toInt).getOrElse(3))
-        case "soft" =>
-          df => graft.operators.UnigramTokenizer.trainSoftDistributed(df, pStr(m("text")),
-            pLong(m("vocab")).toInt,
-            m.get("max-piece").map(pLong(_).toInt).getOrElse(8),
-            m.get("iters").map(pLong(_).toInt).getOrElse(2))
-        case other => throw new IllegalArgumentException(
-          s"unigram-train: mode must be 'hard' or 'soft', got '$other'")
-      }
-    case "unigram-encode" =>
-      val m = pMap(params.head)
-      df => graft.operators.UnigramTokenizer.encode(df, pStr(m("text")),
-        graft.operators.UnigramTokenizer.loadModel(df.sparkSession, pStr(m("model-path"))),
-        pStr(m("out")), m.get("max-piece").map(pLong(_).toInt).getOrElse(8))
+      require(mode == "hard" || mode == "soft",
+        s"unigram-train: mode must be 'hard' or 'soft', got '$mode'")
+      val (text, vocab) = (pStr(m("text")), pLong(m("vocab")).toInt)
+      val maxPiece = m.get("max-piece").map(pLong(_).toInt).getOrElse(8)
+      val iters = m.get("iters").map(pLong(_).toInt).getOrElse(if (mode == "hard") 3 else 2)
+      Staged(fixed(StructType.fromDDL("piece STRING, logp DOUBLE NOT NULL"), text),
+        if (mode == "hard")
+          df => graft.operators.UnigramTokenizer.trainDistributed(df, text, vocab, maxPiece, iters)
+        else
+          df => graft.operators.UnigramTokenizer.trainSoftDistributed(df, text, vocab, maxPiece,
+            iters))
     case "wordpiece-train" =>
       val m = pMap(params.head)
       // batched driver loop by default (exactly equal to sequential;
       // `batch 1` recovers the one-merge-per-job reference path)
-      df => {
-        val merges = graft.operators.WordPiece.trainWordPieceBatched(df, pStr(m("text")),
-          pLong(m("merges")).toInt,
-          m.get("min-pair").map(pLong).getOrElse(2L),
-          m.get("batch").map(pLong(_).toInt).getOrElse(16))
-        graft.operators.WordPiece.vocabFrame(df, pStr(m("text")), merges)
-      }
-    case "wordpiece-encode" =>
-      val m = pMap(params.head)
-      df => graft.operators.WordPiece.encode(df, pStr(m("text")),
-        graft.operators.WordPiece.loadVocab(df.sparkSession, pStr(m("model-path"))),
-        pStr(m("out")), m.get("unk").map(pStr).getOrElse("[UNK]"))
+      val (text, merges) = (pStr(m("text")), pLong(m("merges")).toInt)
+      val (minPair, batch) = (m.get("min-pair").map(pLong).getOrElse(2L),
+        m.get("batch").map(pLong(_).toInt).getOrElse(16))
+      Staged(fixed(graft.operators.WordPiece.VocabSchema, text),
+        df => graft.operators.WordPiece.vocabFrame(df, text,
+          graft.operators.WordPiece.trainWordPieceBatched(df, text, merges, minPair, batch)))
     case "media-audio-features" =>
       df => graft.operators.Multimodal.audioFeatureExtract(df, pLong(pMap(params.head)("dim")).toInt)
     case "warc-records" =>
@@ -2459,10 +1858,11 @@ object Engine {
         m.get("digest").map(pStr).getOrElse("digest"))
     case "snapshot-diff" =>
       val m = pMap(params.head)
-      df => {
-        val old = df.sparkSession.read.parquet(pStr(m("old-path")))
-        graft.operators.Snapshots.diff(old, df, pStr(m("key")), pStr(m("digest")))
-      }
+      val (key, digest, oldPath) = (pStr(m("key")), pStr(m("digest")), pStr(m("old-path")))
+      Staged(
+        reads(digest)(df => withNulls(df.select(col(key)), graft.operators.Snapshots.DiffSchema)),
+        df => graft.operators.Snapshots.diff(df.sparkSession.read.parquet(oldPath), df,
+          key, digest))
     case "compression-ratio" =>
       val m = pMap(params.head)
       df => df.withColumn(m.get("out").map(pStr).getOrElse("compression_ratio"),
@@ -2488,16 +1888,58 @@ object Engine {
         m.get("max-hosts").map(pLong(_).toInt).getOrElse(16))
     case "refetch-candidates" =>
       val m = pMap(params.head)
-      df => {
-        val caps = df.sparkSession.read.parquet(pStr(m("captures-path")))
-        graft.operators.Snapshots.refetchCandidates(df, pStr(m("loc")),
-          pStr(m("lastmod")), caps,
-          m.get("key").map(pStr).getOrElse("urlkey"),
-          m.get("ts").map(pStr).getOrElse("ts"))
-      }
+      val (loc, lastmod, capturesPath) =
+        (pStr(m("loc")), pStr(m("lastmod")), pStr(m("captures-path")))
+      val (key, ts) =
+        (m.get("key").map(pStr).getOrElse("urlkey"), m.get("ts").map(pStr).getOrElse("ts"))
+      Staged(
+        reads(loc, lastmod)(
+          withNulls(_, Seq("urlkey", "last_capture_ts", "reason").map(_ -> StringType))),
+        df => graft.operators.Snapshots.refetchCandidates(df, loc, lastmod,
+          df.sparkSession.read.parquet(capturesPath), key, ts))
 
     case other => throw new IllegalArgumentException(s"unknown action '$other'")
   }
+
+  /** The builder of an action that reads a runtime artifact or launches
+    * Spark jobs. `run` is the transform; `shape` builds the same output
+    * schema over an empty frame, resolving the columns `run` reads but
+    * touching no artifact and starting no job — [[validate]] applies it in
+    * place of `run`. The params are decoded and bound-checked once, before
+    * either is built, so both share every check.
+    */
+  private final case class Staged(shape: DataFrame => DataFrame, run: DataFrame => DataFrame)
+      extends (DataFrame => DataFrame) {
+    def apply(df: DataFrame): DataFrame = run(df)
+  }
+
+  // ---------------- output shapes ----------------
+
+  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+
+  /** `df` plus one typed null column per (name, type). */
+  private def withNulls(df: DataFrame, cols: Seq[(String, DataType)]): DataFrame =
+    cols.foldLeft(df) { case (acc, (name, dt)) => acc.withColumn(name, lit(null).cast(dt)) }
+
+  private def nullCols(schema: StructType): Seq[(String, DataType)] =
+    schema.fields.toSeq.map(f => f.name -> f.dataType)
+
+  /** A shape that resolves the input columns `cols`, then builds `out`. */
+  private def reads(cols: String*)(out: DataFrame => DataFrame): DataFrame => DataFrame =
+    df => { cols.foreach(df(_)); out(df) }
+
+  /** The shape of a pair list: `id1`, `id2` typed as the input's `id`,
+    * then the `measures` DDL columns. */
+  private def pairShape(id: String, measures: String): DataFrame => DataFrame = df => {
+    val idField = df.schema(id)
+    emptyFrame(df.sparkSession, StructType(
+      idField.copy(name = "id1") +: idField.copy(name = "id2") +: StructType.fromDDL(measures).fields))
+  }
+
+  /** A shape whose output schema does not depend on the input. */
+  private def fixed(schema: => StructType, cols: String*): DataFrame => DataFrame =
+    reads(cols: _*)(df => emptyFrame(df.sparkSession, schema))
 
   // ---------------- param coercion ----------------
 

@@ -127,8 +127,8 @@ object Training {
     // ONE stats pass: row count, null labels/vectors, null ELEMENTS
     // inside vectors — all of which would silently damp the fast path's
     // sum()-gradient while n still counts them, or NPE the exact fold.
-    // (Empty-frame totality for the IR validator lives in
-    // Engine.validate's train-logistic stub, not here: an empty
+    // (Empty-frame totality for the IR validator lives in the
+    // train-logistic builder's declared shape, not here: an empty
     // PRODUCTION training frame is a loud error, not a zero model.)
     val Array(st) = tdf.agg(
       count(lit(1)), count(col(labelCol)), count(col(vecCol)),

@@ -232,6 +232,18 @@ class EngineSpec extends AnyFunSuite {
     val reg3 = new StreamRegistry(EngineCtx(testMode = true))
     reg3.addEdn("""{:p {:actions {:action :publish! :params [#secret "chan"] :children []}}}""")
     assert(reg3.run("p", events(ev(1, 1 * S, id = 1))).channels.keySet == Set("chan"))
+    // validate reads the params unmasked, as run does: routing params and
+    // an artifact action's numeric param alike
+    val reg4 = new StreamRegistry(EngineCtx(testMode = true))
+    reg4.addEdn(
+      """{:by {:actions {:action :by :params [#secret [:host]]
+        |                :children [{:action :tap :params [:out]}]}}
+        | :bm {:actions {:action :bm25-query
+        |                :params [{:id :eventId :text :service :k #secret 5
+        |                          :index-path "missing-index"}]
+        |                :children []}}}""".stripMargin)
+    assert(Engine.validate(reg4.get("by").get, spark) == Nil)
+    assert(Engine.validate(reg4.get("bm").get, spark) == Nil)
     // getJson (HTTP get-stream) serves the MASK, never the value — and
     // does not crash on the Secret param
     val json = reg.getJson("s").get
@@ -656,6 +668,10 @@ class EngineSpec extends AnyFunSuite {
         | "children":[{"action":"where","params":[[">","plugin_col",0]],
         |              "children":[{"action":"tap"},{"action":"reinject!"}]}]}""".stripMargin),
       spark, EngineCtx(custom = Map("enrich" -> (_ => df => df)))) == Nil)
+    // a registered action literally named "custom" wins over the plugin
+    // indirection, in validate as in run
+    assert(Engine.validate(Node.fromJson("""{"action":"custom","params":["anything"]}"""),
+      spark, EngineCtx(custom = Map("custom" -> (_ => df => df)))) == Nil)
     val broken = Node.fromJson(
       """{"action":"sdo","children":[
         |  {"action":"frobnicate"},
@@ -673,6 +689,18 @@ class EngineSpec extends AnyFunSuite {
     assert(errs.exists(e => e.contains("/custom") && e.contains("nope")))
     assert(errs.exists(_.contains("/fixed-time-window")))
     // nothing was executed: validation is static analysis only
+  }
+
+  test("run rejects every bad param validate rejects, with the same message") {
+    ValidateShapeSpec.badParams.foreach { case (action, params, input, message) =>
+      val empty = spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        org.apache.spark.sql.types.StructType.fromDDL(input))
+      val e = intercept[IllegalArgumentException] {
+        Engine.run(Node.fromJson(s"""{"action":"$action","params":[$params]}"""), empty,
+          EngineCtx(testMode = true))
+      }
+      assert(e.getMessage == message, action)
+    }
   }
 
   test("default-stream push routing, on the reference's shipped example config") {
