@@ -19,9 +19,7 @@ sealed trait Condition {
   def column: Column = Condition.compile(this)
 }
 
-// Serializable: evaluator closures lift their nested defs onto this
-// module, so executors deserialize a reference to it.
-object Condition extends Serializable {
+object Condition {
   /** Field reference: a top-level column or a nested path such as
     * `attributes.quantile` (reference path vectors, `condition.clj:57-64`).
     */
@@ -93,76 +91,6 @@ object Condition extends Serializable {
   // (condition.clj:19). The non-capturing group is load-bearing:
   // "^a|b$" would mean (^a)|(b$), not ^(a|b)$.
   private def anchored(p: String): String = "^(?:" + p + ")$"
-
-  /** Evaluate a condition against a typed [[graft.model.Event]] — the
-    * row-at-a-time twin of [[compile]], for stateful streaming operators
-    * that run over `Dataset[Event]` (e.g. the generic `cond-dt`). Mirrors
-    * the Column semantics: numeric comparison when both sides are numeric,
-    * null-safe `not=`, anchored regex.
-    */
-  def evaluator(c: Condition): graft.model.Event => Boolean = {
-    def resolve(e: graft.model.Event, f: Field): Any = f.path match {
-      case Seq("host")            => e.host.orNull
-      case Seq("service")         => e.service.orNull
-      case Seq("name")            => e.name.orNull
-      case Seq("state")           => e.state.orNull
-      case Seq("metric")          => e.metric.map(Double.box).orNull
-      case Seq("time")            => Long.box(e.time)
-      case Seq("ttl")             => e.ttl.map(Double.box).orNull
-      case Seq("description")     => e.description.orNull
-      case Seq("tags")            => e.tags
-      case Seq("attributes")      => e.attributes
-      case Seq("eventId")         => Long.box(e.eventId)
-      case Seq("attributes", k)   => e.attributes.get(k).orNull
-      case other                  => throw new IllegalArgumentException(
-        s"unresolvable event field path: ${other.mkString(".")}")
-    }
-    def num(v: Any): Option[Double] = v match {
-      case n: Number => Some(n.doubleValue())
-      case _         => None
-    }
-    def cmp(a: Any, b: Any)(f: (Double, Double) => Boolean): Boolean =
-      (num(a), num(b)) match {
-        case (Some(x), Some(y)) => f(x, y)
-        case _                  => false
-      }
-    def eq(a: Any, b: Any): Boolean =
-      (num(a), num(b)) match {
-        case (Some(x), Some(y)) => x == y
-        case _                  => a != null && a == b
-      }
-    def ev(c: Condition, e: graft.model.Event): Boolean = c match {
-      case Gt(f, v)       => cmp(resolve(e, f), v)(_ > _)
-      case Gte(f, v)      => cmp(resolve(e, f), v)(_ >= _)
-      case Lt(f, v)       => cmp(resolve(e, f), v)(_ < _)
-      case Lte(f, v)      => cmp(resolve(e, f), v)(_ <= _)
-      case Eq(f, v)       => eq(resolve(e, f), v)
-      case NotEq(f, v)    =>
-        val a = resolve(e, f)
-        if (a == null || v == null) !(a == null && v == null) else !eq(a, v)
-      case Pos(f)         => cmp(resolve(e, f), 0)(_ > _)
-      case Neg(f)         => cmp(resolve(e, f), 0)(_ < _)
-      case Zero(f)        => cmp(resolve(e, f), 0)(_ == _)
-      case IsNil(f)       => resolve(e, f) == null
-      case NotNil(f)      => resolve(e, f) != null
-      case Contains(f, v) => resolve(e, f) match {
-        case s: Seq[_] => s.exists(eq(_, v))
-        case _         => false
-      }
-      case Absent(f, v)   => resolve(e, f) match {
-        case s: Seq[_] => !s.exists(eq(_, v))
-        case _         => true
-      }
-      case Regex(f, p)    => resolve(e, f) match {
-        case s: String => s.matches(anchored(p))
-        case _         => false
-      }
-      case AlwaysTrue     => true
-      case And(cs)        => cs.forall(ev(_, e))
-      case Or(cs)         => cs.exists(ev(_, e))
-    }
-    e => ev(c, e)
-  }
 
   /** Parse the serialized vector form used by the IR, mirroring the
     * reference's EDN shape (`condition.clj:30-48`):

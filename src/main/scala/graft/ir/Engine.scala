@@ -595,9 +595,7 @@ object Engine {
       else Analytics.movingTimeWindow(durOf(params), keys)(df)
     case "throttle" =>
       val m = pMap(params.head)
-      df =>
-        if (df.isStreaming) Streaming.throttle(pLong(m("count")).toInt, pLong(m("duration")), keys)(df).toDF()
-        else Analytics.throttle(pLong(m("count")).toInt, pLong(m("duration")), keys)(df).toDF()
+      Analytics.throttle(pLong(m("count")).toInt, pLong(m("duration")), keys)
     case "stable" =>
       val m = pMap(params.head)
       df =>
@@ -605,56 +603,34 @@ object Engine {
         else Analytics.stable(pLong(m("dt")), pStr(m("field")), keys)(df)
     case "changed" =>
       val m = pMap(params.head)
-      df =>
-        if (df.isStreaming) Streaming.changed(pStr(m("field")), pStr(m("init")), keys)(df).toDF()
-        else Analytics.changed(pStr(m("field")), m("init"), keys)(df)
+      val init = m("init") match { case s: String => pStr(s); case other => other }
+      Analytics.changed(pStr(m("field")), init, keys)
     case "above-dt" =>
       val m = pMap(params.head)
-      df =>
-        if (df.isStreaming) Streaming.aboveDt(pDouble(m("threshold")), pLong(m("duration")), keys)(df).toDF()
-        else Analytics.aboveDt(pDouble(m("threshold")), pLong(m("duration")), keys)(df)
+      Analytics.aboveDt(pDouble(m("threshold")), pLong(m("duration")), keys)
     case "below-dt" =>
       val m = pMap(params.head)
-      df =>
-        if (df.isStreaming) Streaming.belowDt(pDouble(m("threshold")), pLong(m("duration")), keys)(df).toDF()
-        else Analytics.belowDt(pDouble(m("threshold")), pLong(m("duration")), keys)(df)
+      Analytics.belowDt(pDouble(m("threshold")), pLong(m("duration")), keys)
     case "between-dt" =>
       val m = pMap(params.head)
-      df =>
-        if (df.isStreaming)
-          Streaming.betweenDt(pDouble(m("low")), pDouble(m("high")), pLong(m("duration")), keys)(df).toDF()
-        else Analytics.betweenDt(pDouble(m("low")), pDouble(m("high")), pLong(m("duration")), keys)(df)
+      Analytics.betweenDt(pDouble(m("low")), pDouble(m("high")), pLong(m("duration")), keys)
     case "outside-dt" =>
       val m = pMap(params.head)
-      df =>
-        if (df.isStreaming)
-          Streaming.outsideDt(pDouble(m("low")), pDouble(m("high")), pLong(m("duration")), keys)(df).toDF()
-        else Analytics.outsideDt(pDouble(m("low")), pDouble(m("high")), pLong(m("duration")), keys)(df)
+      Analytics.outsideDt(pDouble(m("low")), pDouble(m("high")), pLong(m("duration")), keys)
     case "cond-dt" =>
       val m = pMap(params.head)
-      val cond = Condition.parse(m("condition"))
-      df =>
-        if (df.isStreaming)
-          Streaming.condDt(Condition.evaluator(cond), pLong(m("duration")), keys)(df).toDF()
-        else Analytics.condDt(cond, pLong(m("duration")), keys)(df)
+      Analytics.condDt(Condition.parse(m("condition")), pLong(m("duration")), keys)
     case "sessionize" =>
       val m = pMap(params.head)
       df =>
         if (df.isStreaming)
           Streaming.sessionize(pLong(m("gap")), delayOf(params), keys)(df)
         else Analytics.sessionize(pLong(m("gap")), keys)(df)
-    case "ddt" => df =>
-      if (df.isStreaming) Streaming.ddt(keys)(df).toDF() else Analytics.ddt(keys)(df)
-    case "ddt-pos" => df =>
-      if (df.isStreaming) Streaming.ddt(keys, removeNeg = true)(df).toDF()
-      else Analytics.ddtPos(keys)(df)
-    case "ewma-timeless" => df =>
-      if (df.isStreaming) Streaming.ewmaTimeless(pDouble(params.head), keys)(df).toDF()
-      else Analytics.ewmaTimeless(pDouble(params.head), keys)(df).toDF()
-    case "smax" => df =>
-      if (df.isStreaming) Streaming.smax(keys)(df).toDF() else Analytics.smax(keys)(df)
-    case "smin" => df =>
-      if (df.isStreaming) Streaming.smin(keys)(df).toDF() else Analytics.smin(keys)(df)
+    case "ddt"           => Analytics.ddt(keys)
+    case "ddt-pos"       => Analytics.ddtPos(keys)
+    case "ewma-timeless" => Analytics.ewmaTimeless(pDouble(params.head), keys)
+    case "smax"          => Analytics.smax(keys)
+    case "smin"          => Analytics.smin(keys)
 
     // §2.6 collection aggregates
     case "coll-mean"     => Windows.collMean

@@ -2,15 +2,19 @@ package graft.operators
 
 import graft.conditions.Condition
 import graft.model.Event
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import graft.streaming.Streaming
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Order-sensitive operators (SURVEY §2.5 "stateful" rows): batch
-  * implementations over analytic window functions, plus a scalable
-  * per-key ordered scan for the genuinely sequential folds.
+  * implementations over analytic window functions, plus the genuinely
+  * sequential per-key folds, each declared once as a step that both a
+  * batch frame and a stream run ([[perKeyFold]]).
   *
   * Design for scale: every operator partitions by the `by`-keys (the
   * reference's per-key fork, `action.clj:1559-1641`) — state never crosses
@@ -63,42 +67,6 @@ object Analytics {
       .drop("__sid")
   }
 
-  /** `ddt` / `ddt-pos` — d(metric)/d(time) between consecutive events
-    * (`action.clj:1042-1083`). The reference divides by the raw ns time
-    * delta; `ddt-pos` drops negative derivatives (counter resets), zero-dt
-    * pairs are skipped, the first event emits nothing.
-    */
-  def ddt(keys: Seq[String] = Nil, removeNeg: Boolean = false)(df: DataFrame): DataFrame = {
-    val w = orderedWindow(keys)
-    val dm = col("metric") - lag(col("metric"), 1).over(w)
-    val dt = col("time") - lag(col("time"), 1).over(w)
-    val out = df.withColumn("__dm", dm).withColumn("__dt", dt)
-      .filter(col("__dt").isNotNull && col("__dt") =!= 0L)
-      .withColumn("metric", col("__dm") / col("__dt"))
-      .drop("__dm", "__dt")
-    if (removeNeg) out.filter(col("metric") >= 0) else out
-  }
-  def ddtPos(keys: Seq[String] = Nil)(df: DataFrame): DataFrame = ddt(keys, removeNeg = true)(df)
-
-  /** `changed` — pass only when the field differs from the previous
-    * event's value; an initial value seeds the comparison
-    * (`action.clj:1329-1375`).
-    */
-  def changed(field: String, init: Any, keys: Seq[String] = Nil)(df: DataFrame): DataFrame = {
-    val prev = coalesce(lag(col(field), 1).over(orderedWindow(keys)), lit(init))
-    df.withColumn("__prev", prev).filter(!(col(field) <=> col("__prev"))).drop("__prev")
-  }
-
-  /** `smax` / `smin` — running extremum event, re-emitted per input
-    * (`action.clj:2742-2795`): metric becomes the running max/min.
-    */
-  def smax(keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
-    df.withColumn("metric",
-      max(col("metric")).over(orderedWindow(keys).rowsBetween(Window.unboundedPreceding, 0)))
-  def smin(keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
-    df.withColumn("metric",
-      min(col("metric")).over(orderedWindow(keys).rowsBetween(Window.unboundedPreceding, 0)))
-
   /** `moving-event-window` — sliding last-N-events payload, one output per
     * input (`action.clj:1220-1246`).
     */
@@ -129,39 +97,6 @@ object Analytics {
       .filter(size(col("events")) === n)
   }
 
-  /** `above-dt` / `below-dt` / `between-dt` / `outside-dt` / `cond-dt` —
-    * the condition must hold for more than `dt` seconds, then matching
-    * events pass until it breaks (`action.clj:476-647`). Batch shape:
-    * run-length groups of consecutive matching events; an event passes iff
-    * `time > run_start + dt` (strict, as in the reference:
-    * `(> event-time (+ time dt))`).
-    */
-  def condDt(condition: Condition, dtSeconds: Long, keys: Seq[String] = Nil)(df: DataFrame): DataFrame = {
-    val w = orderedWindow(keys)
-    val ok = condition.column
-    val breaks = sum(when(ok, 0).otherwise(1)).over(w.rowsBetween(Window.unboundedPreceding, 0))
-    val d = df.withColumn("__ok", ok).withColumn("__grp", breaks)
-    val runW = (if (keys.isEmpty) Window.partitionBy(col("__grp"))
-                else Window.partitionBy((keys.map(col) :+ col("__grp")): _*))
-    val runStart = min(when(col("__ok"), col("time"))).over(runW)
-    d.withColumn("__start", runStart)
-      .filter(col("__ok") && col("time") > col("__start") + lit(dtSeconds * Event.NsPerSecond))
-      .drop("__ok", "__grp", "__start")
-  }
-
-  def aboveDt(threshold: Double, dtSeconds: Long, keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
-    condDt(Condition.Gt(Condition.Field("metric"), threshold), dtSeconds, keys)(df)
-  def belowDt(threshold: Double, dtSeconds: Long, keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
-    condDt(Condition.Lt(Condition.Field("metric"), threshold), dtSeconds, keys)(df)
-  def betweenDt(low: Double, high: Double, dtSeconds: Long, keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
-    condDt(Condition.And.of(
-      Condition.Gt(Condition.Field("metric"), low),
-      Condition.Lt(Condition.Field("metric"), high)), dtSeconds, keys)(df)
-  def outsideDt(low: Double, high: Double, dtSeconds: Long, keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
-    condDt(Condition.Or.of(
-      Condition.Lt(Condition.Field("metric"), low),
-      Condition.Gt(Condition.Field("metric"), high)), dtSeconds, keys)(df)
-
   /** `stable` — flap damping: events pass only if the field's value stays
     * constant for at least `dt` seconds (`action.clj:2053-2138`). A run of
     * equal values either reaches `dt` (first event past `run_start+dt`
@@ -183,103 +118,133 @@ object Analytics {
   }
 
   // --------------------------------------------------------------------
-  // Genuinely sequential folds: one shuffle on the keys, external sort,
-  // then a linear per-partition scan — the batch twin of
-  // mapGroupsWithState. O(n) state, spill-safe, no collect().
+  // Sequential per-key folds: each action below declares ONE step, and
+  // two drivers run it. A batch frame takes one shuffle on the keys, an
+  // external sort and a linear pass over the Tungsten rows (no Event
+  // decode, no collect); a stream takes the same step in the TTL'd
+  // state-store harness (Streaming.foldStream). Both group by the same
+  // key rule and keep every column of the input.
   // --------------------------------------------------------------------
 
-  /** Per-row verdict of a [[perKeyMetricScan]] step. */
+  /** Per-row verdict of a fold step. */
   sealed trait Emit
   object Emit {
     /** Drop the event. */
     case object Drop extends Emit
     /** Emit the event unchanged. */
     case object Keep extends Emit
-    /** Emit the event with `metric` replaced. */
-    final case class SetMetric(m: Double) extends Emit
+    /** Emit the event with `metric` replaced; `null` clears it. */
+    final case class SetMetric(m: java.lang.Double) extends Emit
   }
 
-  /** Sequential per-key fold whose step reads only `(time, metric)` and
-    * either passes, drops, or rewrites `metric` — the shape of the
-    * reference's throttle/ewma family (`action.clj:1163-1276`).
-    *
-    * Unlike [[perKeyScan]] this never decodes the row: after the shuffle
-    * + external sort it walks the Tungsten rows directly, reading the two
-    * fixed-width fields and the key columns lazily. The `tags` array and
-    * `attributes` map stay as undecoded bytes (unless a key names an
-    * attribute), so the per-row cost is two field reads instead of a full
-    * 11-column `Event` encoder round-trip.
+  /** One fold step: `(state, time, metric, probe) => (state', verdict)`.
+    * `metric` is null when the event has none; `probe` is the event's
+    * value of the builder's probe column (null without one). A null state
+    * means "nothing to keep": the stream harness removes it, and the key
+    * restarts from `init`, so only a fold whose `init` is null returns one.
+    * The state type needs an `Encoder`: a stream keeps it in the state
+    * store.
     */
+  type Step[S] = (S, Long, java.lang.Double, Any) => (S, Emit)
+
+  /** Name of the probe column while a fold runs. */
+  private[graft] val ProbeCol = "__probe"
+
+  /** Run `step` per key in (time, eventId) order over a batch or a
+    * streaming frame; `init` is the state of a key not seen yet. `probe`
+    * is computed before the fold and handed to every step. `forkTtl` is
+    * the streams' idle-key eviction ([[graft.streaming.Streaming.DefaultForkTtlSeconds]]);
+    * a batch fold ends with its job, so it ignores it.
+    *
+    * Keys: a top-level column is read directly — string or integral
+    * (`salt`'s `__salt`), and a null key is its own group, distinct from
+    * `""`; any other key is looked up in `attributes`.
+    */
+  def perKeyFold[S: Encoder](df: DataFrame, keys: Seq[String], probe: Option[Column] = None,
+                             forkTtl: Option[Long] = Some(Streaming.DefaultForkTtlSeconds))(
+      init: () => S)(step: Step[S]): DataFrame =
+    withFoldInput(df, keys, probe) { (input, keyCols) =>
+      if (df.isStreaming) Streaming.foldStream(input, keyCols, forkTtl, init, step)
+      else scan(input, keyCols, init, step)
+    }
+
+  /** The batch driver of [[perKeyFold]] for a step that reads no probe. */
   def perKeyMetricScan[S](df: DataFrame, keys: Seq[String])(init: () => S)(
-      step: (S, Long, java.lang.Double) => (S, Emit)): DataFrame = {
+      step: (S, Long, java.lang.Double) => (S, Emit)): DataFrame =
+    withFoldInput(df, keys, None)((input, keyCols) =>
+      scan[S](input, keyCols, init, (s, t, m, _) => step(s, t, m)))
+
+  /** A field as a column: top-level if the frame has it, else the
+    * `attributes` entry of that name.
+    */
+  private def field(df: DataFrame, name: String): Column =
+    if (df.columns.contains(name)) col(name) else col("attributes").getItem(name)
+
+  /** Run a fold driver over `df` with the probe and any attribute keys
+    * appended as columns (dropped again from its output); the driver gets
+    * the top-level names of the key columns.
+    */
+  private def withFoldInput(df: DataFrame, keys: Seq[String], probe: Option[Column])(
+      run: (DataFrame, Seq[String]) => DataFrame): DataFrame = {
+    val withProbe = probe.fold(df)(df.withColumn(ProbeCol, _))
+    val (input, keyCols) = keys.zipWithIndex.foldLeft((withProbe, Seq.empty[String])) {
+      case ((d, names), (k, i)) =>
+        if (!df.columns.contains(k)) (d.withColumn(s"__key$i", field(df, k)), names :+ s"__key$i")
+        else df.schema(k).dataType match {
+          case _: StringType | ByteType | ShortType | IntegerType | LongType => (d, names :+ k)
+          case dt => throw new IllegalArgumentException(
+            s"per-key-scan key '$k' is a top-level ${dt.simpleString} column; " +
+              "only string or integral columns (or attribute-map keys) can be grouping keys")
+        }
+    }
+    run(input, keyCols).drop(input.columns.diff(df.columns).toSeq: _*)
+  }
+
+  /** The batch driver: one shuffle on the keys, a sort by (keys, time,
+    * eventId), then a pass over the rows that reads only the key, `time`,
+    * `metric` and probe fields — `tags` and `attributes` stay undecoded
+    * bytes. Lazy: building it starts no Spark job.
+    */
+  private def scan[S](df: DataFrame, keys: Seq[String], init: () => S, step: Step[S]): DataFrame = {
     warnKeyless("per-key-scan", keys)
-    val spark = df.sparkSession
     val schema = df.schema
     val sortCols = keys.map(col) ++ Seq(col("time"), col("eventId"))
-    val parted =
-      if (keys.isEmpty) df.repartition(1).sortWithinPartitions(sortCols: _*)
-      else df.repartition(keys.map(col): _*).sortWithinPartitions(sortCols: _*)
+    val parted = (if (keys.isEmpty) df.repartition(1) else df.repartition(keys.map(col): _*))
+      .sortWithinPartitions(sortCols: _*)
     val timeOrd = schema.fieldIndex("time")
     val metricOrd = schema.fieldIndex("metric")
-    val topLevel = schema.fieldNames.toSet
-    val attrOrd = if (topLevel("attributes")) schema.fieldIndex("attributes") else -1
-    // Per key: Left(top-level ordinal) or Right(attribute name), mirroring
-    // perKeyScan's keyOf. Attribute keys scan the map's key array in place.
-    // Only string-typed top-level columns may be read via getUTF8String —
-    // a numeric ordinal would read garbage bytes from the UnsafeRow, so
-    // reject it at plan construction instead.
-    val keyGetters: Array[Either[Int, org.apache.spark.unsafe.types.UTF8String]] =
-      keys.map { k =>
-        if (topLevel(k)) {
-          val f = schema(k)
-          if (f.dataType != org.apache.spark.sql.types.StringType)
-            throw new IllegalArgumentException(
-              s"per-key-scan key '$k' is a top-level ${f.dataType.simpleString} column; " +
-                "only string columns (or attribute-map keys) can be grouping keys")
-          Left(schema.fieldIndex(k))
-        } else Right(org.apache.spark.unsafe.types.UTF8String.fromString(k))
-      }.toArray
+    val probeOrd = schema.fieldNames.indexOf(ProbeCol)
+    val probeType = if (probeOrd < 0) NullType else schema(probeOrd).dataType
+    val probeOf = Bridge.toScala(probeType)
+    val keyOrds = keys.map(schema.fieldIndex).toArray
+    val keyTypes = keyOrds.map(schema(_).dataType)
 
     val rdd = Bridge.toInternalRows(parted).mapPartitions { it =>
-      val nk = keyGetters.length
-      var cur = new Array[String](nk)
-      var tmp = new Array[String](nk)
+      val nk = keyOrds.length
+      // a string key is a view of the sorter's reused buffer: compare it
+      // in place, and copy it only when it becomes the current key
+      def keyAt(row: InternalRow, i: Int): Any =
+        if (row.isNullAt(keyOrds(i))) null else row.get(keyOrds(i), keyTypes(i))
+      val cur = new Array[Any](nk)
       var started = false
       var state: S = null.asInstanceOf[S]
       it.flatMap { row =>
         var changed = !started
         var i = 0
-        while (i < nk) {
-          val v: String = keyGetters(i) match {
-            case Left(ord) =>
-              if (row.isNullAt(ord)) null else row.getUTF8String(ord).toString
-            case Right(name) =>
-              if (attrOrd < 0 || row.isNullAt(attrOrd)) null
-              else {
-                val m = row.getMap(attrOrd)
-                val ka = m.keyArray(); val va = m.valueArray()
-                var j = 0; var found: String = null
-                val n = ka.numElements()
-                while (j < n && found == null) {
-                  if (name == ka.getUTF8String(j))
-                    found = if (va.isNullAt(j)) null else va.getUTF8String(j).toString
-                  j += 1
-                }
-                found
-              }
-          }
-          tmp(i) = v
-          if (!changed && v != cur(i)) changed = true
-          i += 1
-        }
+        while (!changed && i < nk) { changed = keyAt(row, i) != cur(i); i += 1 }
         if (changed) {
-          val t = cur; cur = tmp; tmp = t
+          for (j <- 0 until nk) cur(j) = keyAt(row, j) match {
+            case s: UTF8String => s.clone()
+            case v             => v
+          }
           started = true
           state = init()
         }
         val metric: java.lang.Double =
           if (row.isNullAt(metricOrd)) null else row.getDouble(metricOrd)
-        val (s2, emit) = step(state, row.getLong(timeOrd), metric)
+        val probe = if (probeOrd < 0 || row.isNullAt(probeOrd)) null
+                    else probeOf(row.get(probeOrd, probeType))
+        val (s2, emit) = step(state, row.getLong(timeOrd), metric, probe)
         state = s2
         emit match {
           case Emit.Keep => Iterator.single(row)
@@ -287,75 +252,130 @@ object Analytics {
           case Emit.SetMetric(v) =>
             // The sorter reuses its row buffer; copy before mutating.
             val r2 = row.copy()
-            r2.setDouble(metricOrd, v)
+            if (v == null) r2.setNullAt(metricOrd) else r2.setDouble(metricOrd, v)
             Iterator.single(r2)
         }
       }
     }
-    Bridge.fromInternalRows(spark, rdd, schema)
-  }
-
-  /** Repartition by `keys`, sort each partition by (keys, time, eventId),
-    * then run a sequential stateful scan; `init` state is re-created at
-    * every key change.
-    */
-  def perKeyScan[S](df: DataFrame, keys: Seq[String])(
-      init: () => S)(step: (S, Event) => (S, Iterator[Event])): Dataset[Event] = {
-    warnKeyless("per-key-scan", keys)
-    val spark = df.sparkSession
-    import spark.implicits._
-    val ds = df.select(
-      col("host"), col("service"), col("name"), col("state"),
-      col("metric"), col("time"), col("ttl"), col("description"),
-      col("tags"), col("attributes"), col("eventId")).as[Event]
-    val sortCols = keys.map(col) ++ Seq(col("time"), col("eventId"))
-    val parted =
-      if (keys.isEmpty) ds.repartition(1).sortWithinPartitions(sortCols: _*)
-      else ds.repartition(keys.map(col): _*).sortWithinPartitions(sortCols: _*)
-    val keyOf: Event => Seq[Option[String]] = e => keys.map {
-      case "host"    => e.host
-      case "service" => e.service
-      case "name"    => e.name
-      case "state"   => e.state
-      case other     => e.attributes.get(other)
-    }
-    parted.mapPartitions { it =>
-      var curKey: Seq[Option[String]] = null
-      var state: S = null.asInstanceOf[S]
-      it.flatMap { e =>
-        val k = keyOf(e)
-        if (curKey == null || k != curKey) { curKey = k; state = init() }
-        val (s2, out) = step(state, e)
-        state = s2
-        out
-      }
-    }
+    Bridge.fromInternalRows(df.sparkSession, rdd, schema)
   }
 
   /** `ewma-timeless` — EWMA with ratio r, seeded at 0, one output per
     * input (`action.clj:1249-1276`): m' = (1-r)*m + r*x.
     */
-  def ewmaTimeless(r: Double, keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
-    perKeyMetricScan(df, keys)(() => Double.box(0.0)) { (m, _, x) =>
+  def ewmaTimeless(r: Double, keys: Seq[String] = Nil,
+                   forkTtl: Option[Long] = Some(Streaming.DefaultForkTtlSeconds))(df: DataFrame): DataFrame =
+    perKeyFold(df, keys, forkTtl = forkTtl)(() => 0.0) { (m, _, x, _) =>
       if (x == null) (m, Emit.Keep)
       else {
-        val m2 = (1 - r) * m.doubleValue() + r * x.doubleValue()
-        (Double.box(m2), Emit.SetMetric(m2))
+        val m2 = (1 - r) * m + r * x
+        (m2, Emit.SetMetric(m2))
       }
-    }
+    }(Encoders.scalaDouble)
 
   /** `throttle` — let at most N events pass per duration; the window opens
     * at the first event's time and re-opens at the first event past
     * `start + duration` (`action.clj:1163-1217`).
     */
-  def throttle(count: Int, durationSeconds: Long, keys: Seq[String] = Nil)(df: DataFrame): DataFrame = {
+  def throttle(count: Int, durationSeconds: Long, keys: Seq[String] = Nil,
+               forkTtl: Option[Long] = Some(Streaming.DefaultForkTtlSeconds))(df: DataFrame): DataFrame = {
     val durNs = durationSeconds * Event.NsPerSecond
-    final case class St(var start: Long, var n: Int)
-    perKeyMetricScan(df, keys)(() => St(Long.MinValue, 0)) { (s, t, _) =>
-      if (s.start == Long.MinValue || t >= s.start + durNs) {
-        s.start = t; s.n = 1; (s, Emit.Keep)
-      } else if (s.n >= count) (s, Emit.Drop)
-      else { s.n += 1; (s, Emit.Keep) }
-    }
+    perKeyFold(df, keys, forkTtl = forkTtl)(() => (Long.MinValue, 0)) { case (s @ (start, n), t, _, _) =>
+      if (start == Long.MinValue || t >= start + durNs) ((t, 1), Emit.Keep)
+      else if (n >= count) (s, Emit.Drop)
+      else ((start, n + 1), Emit.Keep)
+    }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaInt))
+  }
+
+  /** `changed` — pass only when the field differs from the previous
+    * event's value (`action.clj:1329-1375`); `init` stands in for a
+    * previous value that is absent or null. The field is compared in the
+    * common type of the field and `init`.
+    */
+  def changed(fieldName: String, init: Any, keys: Seq[String] = Nil,
+              forkTtl: Option[Long] = Some(Streaming.DefaultForkTtlSeconds))(df: DataFrame): DataFrame = {
+    val v = field(df, fieldName)
+    val dt = df.select(coalesce(v, lit(init))).schema.head.dataType
+    val seed = Bridge.evalConstant(lit(init).cast(dt), dt)
+    // the state is the previous value as a one-field row: the field's
+    // type is only known from the frame
+    perKeyFold(df, keys, Some(v.cast(dt)), forkTtl)(() => Row(seed)) { (prev, _, _, x) =>
+      (Row(if (x == null) seed else x), if (x == prev.get(0)) Emit.Drop else Emit.Keep)
+    }(Encoders.row(new StructType().add("prev", dt)))
+  }
+
+  /** `ddt` / `ddt-pos` — d(metric)/d(time) against the immediately
+    * preceding event (`action.clj:1042-1083`). The reference divides by
+    * the raw ns time delta; the first event and zero-dt pairs emit
+    * nothing, a null metric on either side gives a null derivative, and
+    * `ddt-pos` drops negative (and null) derivatives (counter resets).
+    */
+  def ddt(keys: Seq[String] = Nil, removeNeg: Boolean = false,
+          forkTtl: Option[Long] = Some(Streaming.DefaultForkTtlSeconds))(df: DataFrame): DataFrame =
+    perKeyFold(df, keys, forkTtl = forkTtl)(() => null: (Long, java.lang.Double)) { (prev, t, m, _) =>
+      val emit =
+        if (prev == null || t == prev._1) Emit.Drop
+        else if (m == null || prev._2 == null) (if (removeNeg) Emit.Drop else Emit.SetMetric(null))
+        else {
+          val d = (m - prev._2) / (t - prev._1).toDouble
+          if (removeNeg && d < 0) Emit.Drop else Emit.SetMetric(d)
+        }
+      ((t, m), emit)
+    }(Encoders.tuple(Encoders.scalaLong, Encoders.DOUBLE))
+  def ddtPos(keys: Seq[String] = Nil,
+             forkTtl: Option[Long] = Some(Streaming.DefaultForkTtlSeconds))(df: DataFrame): DataFrame =
+    ddt(keys, removeNeg = true, forkTtl)(df)
+
+  /** `smax` / `smin` — running extremum, re-emitted per input
+    * (`action.clj:2742-2795`): metric becomes the running max/min; an
+    * event without a metric carries the extremum so far.
+    */
+  def smax(keys: Seq[String] = Nil,
+           forkTtl: Option[Long] = Some(Streaming.DefaultForkTtlSeconds))(df: DataFrame): DataFrame =
+    extremum(df, keys, forkTtl, sign = 1)
+  def smin(keys: Seq[String] = Nil,
+           forkTtl: Option[Long] = Some(Streaming.DefaultForkTtlSeconds))(df: DataFrame): DataFrame =
+    extremum(df, keys, forkTtl, sign = -1)
+
+  private def extremum(df: DataFrame, keys: Seq[String], forkTtl: Option[Long], sign: Int): DataFrame =
+    perKeyFold(df, keys, forkTtl = forkTtl)(() => null: java.lang.Double) { (cur, _, m, _) =>
+      val c = if (m == null || (cur != null && sign * java.lang.Double.compare(cur, m) >= 0)) cur else m
+      (c, if (c == m) Emit.Keep else Emit.SetMetric(c))
+    }(Encoders.DOUBLE)
+
+  /** `above-dt` / `below-dt` / `between-dt` / `outside-dt` / `cond-dt` —
+    * the condition must hold for more than `dt` seconds, then matching
+    * events pass until it breaks (`action.clj:476-647`). State is the
+    * start of the current run of matching events; an event passes iff
+    * `time > run_start + dt` (strict, as in the reference:
+    * `(> event-time (+ time dt))`).
+    */
+  def condDt(condition: Condition, dtSeconds: Long, keys: Seq[String] = Nil,
+             forkTtl: Option[Long] = Some(Streaming.DefaultForkTtlSeconds))(df: DataFrame): DataFrame =
+    holdsFor(df, keys, forkTtl, dtSeconds, Some(condition.column))((_, p) => p == true)
+
+  def aboveDt(threshold: Double, dtSeconds: Long, keys: Seq[String] = Nil,
+              forkTtl: Option[Long] = Some(Streaming.DefaultForkTtlSeconds))(df: DataFrame): DataFrame =
+    holdsFor(df, keys, forkTtl, dtSeconds)((m, _) => m != null && m > threshold)
+  def belowDt(threshold: Double, dtSeconds: Long, keys: Seq[String] = Nil,
+              forkTtl: Option[Long] = Some(Streaming.DefaultForkTtlSeconds))(df: DataFrame): DataFrame =
+    holdsFor(df, keys, forkTtl, dtSeconds)((m, _) => m != null && m < threshold)
+  def betweenDt(low: Double, high: Double, dtSeconds: Long, keys: Seq[String] = Nil,
+                forkTtl: Option[Long] = Some(Streaming.DefaultForkTtlSeconds))(df: DataFrame): DataFrame =
+    holdsFor(df, keys, forkTtl, dtSeconds)((m, _) => m != null && m > low && m < high)
+  def outsideDt(low: Double, high: Double, dtSeconds: Long, keys: Seq[String] = Nil,
+                forkTtl: Option[Long] = Some(Streaming.DefaultForkTtlSeconds))(df: DataFrame): DataFrame =
+    holdsFor(df, keys, forkTtl, dtSeconds)((m, _) => m != null && (m < low || m > high))
+
+  private def holdsFor(df: DataFrame, keys: Seq[String], forkTtl: Option[Long], dtSeconds: Long,
+                       probe: Option[Column] = None)(holds: (java.lang.Double, Any) => Boolean): DataFrame = {
+    val dtNs = dtSeconds * Event.NsPerSecond
+    perKeyFold(df, keys, probe, forkTtl)(() => null: java.lang.Long) { (start, t, m, p) =>
+      if (!holds(m, p)) (null, Emit.Drop)
+      else {
+        val s: java.lang.Long = if (start == null) t else start
+        (s, if (t > s + dtNs) Emit.Keep else Emit.Drop)
+      }
+    }(Encoders.LONG)
   }
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.Analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -130,13 +131,13 @@ object StreamServe {
     val action = str(op, "action", "streaming op")
     action match {
       case "ewma" =>
-        df => Streaming.ewmaTimeless(num(op, "r", 0.5), keys(op))(df).toDF()
+        Analytics.ewmaTimeless(num(op, "r", 0.5), keys(op))
       case "changed" =>
-        df => Streaming.changed(str(op, "field", "changed op"),
-          str(op, "init", "changed op"), keys(op))(df).toDF()
+        Analytics.changed(str(op, "field", "changed op"),
+          str(op, "init", "changed op"), keys(op))
       case "throttle" =>
-        df => Streaming.throttle(num(op, "count", 1).toInt,
-          num(op, "seconds", 60).toLong, keys(op))(df).toDF()
+        Analytics.throttle(num(op, "count", 1).toInt,
+          num(op, "seconds", 60).toLong, keys(op))
       case "stable" =>
         // buffer-state representative: runs of equal field values hold
         // until they last `seconds`, then flush whole — restart must

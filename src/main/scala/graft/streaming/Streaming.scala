@@ -1,10 +1,11 @@
 package graft.streaming
 
 import graft.model.Event
-import graft.operators.Windows
-import org.apache.spark.sql.{DataFrame, Dataset}
+import graft.operators.{Analytics, Windows}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, KeyValueGroupedDataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.StructType
 
 /** The Structured Streaming execution path (SURVEY §7.1 modules 6-7).
   *
@@ -18,16 +19,21 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * boundaries instead of per event (documented delta, SURVEY §7.4.3 — same
   * steady-state results on in-delay data, different edge timing).
   *
-  * Genuinely sequential operators (count windows, throttle, ewma, changed,
-  * smax/smin) use `flatMapGroupsWithState` keyed by the `by` fork fields —
-  * the streaming twin of `Analytics.perKeyScan`; state is per-key, spills
-  * to the state store, and never crosses a key boundary, so the plan
-  * shards across executors exactly like the batch path.
+  * Genuinely sequential operators run `flatMapGroupsWithState` keyed by
+  * the `by` fork fields; state is per-key, lives in the state store, and
+  * never crosses a key boundary, so the plan shards across executors
+  * exactly like the batch path. The twelve per-key folds (`throttle`,
+  * `ewma-timeless`, `smax`/`smin`, `ddt`/`ddt-pos`, the `*-dt` family,
+  * `changed`) have no stream twin: each is one step declared in
+  * [[graft.operators.Analytics]], and [[foldStream]] is its streaming
+  * driver, over the frame's own rows. Only the count and moving windows
+  * and `stable` keep a stream twin here, because they emit a different
+  * shape per mode.
   *
   * Within a micro-batch, events are folded in (time, eventId) order — the
   * deterministic stand-in for the reference's arrival order. Output schema
   * and values match the batch twins on in-order input (asserted per op in
-  * StreamingSpec against the batch implementation).
+  * StreamingSpec and FoldSpec against the batch implementation).
   */
 object Streaming {
 
@@ -763,86 +769,94 @@ object Streaming {
   /** Emitted by [[fixedEventWindow]]: one complete count-window per key. */
   final case class EventWindow(key: String, windowId: Long, events: Seq[Event])
 
-  /** Project to the Event schema. `extra` columns ride along un-dropped —
-    * `as[Event]` binds fields by name and tolerates surplus columns — so
-    * the TTL path can carry the watermark-tagged `__ts` attribute into
-    * `flatMapGroupsWithState`'s child output (Spark's analyzer requires a
-    * watermarked attribute there for `EventTimeTimeout`).
+  /** Project to the Event schema. A watermark-tagged `__ts` column rides
+    * along un-dropped — `as[Event]` binds fields by name and tolerates
+    * surplus columns — because Spark's analyzer requires a watermarked
+    * attribute in `flatMapGroupsWithState`'s child output for
+    * `EventTimeTimeout`.
     */
-  private def typed(df: DataFrame,
-                    extra: Seq[org.apache.spark.sql.Column] = Nil): Dataset[Event] = {
+  private def typed(df: DataFrame): Dataset[Event] = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(Seq(
       col("host"), col("service"), col("name"), col("state"),
       col("metric"), col("time"), col("ttl"), col("description"),
-      col("tags"), col("attributes"), col("eventId")) ++ extra: _*).as[Event]
+      col("tags"), col("attributes"), col("eventId")) ++
+      df.columns.find(_ == "__ts").map(col): _*).as[Event]
   }
 
-  /** Shared harness for the sequential per-key ops: orders each
-    * micro-batch's events, applies `fold`, and — the streaming twin of the
-    * reference's fork-TTL GC (`action.clj:1559-1596`: forks idle past
-    * `:fork-ttl` on the event clock are cleared) — registers an
-    * event-time timeout per key so the state store drops keys idle past
-    * the TTL instead of accumulating state forever over high-cardinality
-    * key spaces.
-    *
-    * Mechanics: the input gets a watermark with delay = TTL; each batch
-    * re-arms the key's timeout at its last event time, so the timeout
-    * fires once the stream's event clock is TTL past the key's last
-    * event — the reference's `(- current-time fork-ttl) > fork.time` test
-    * with the watermark as `current-time`. Because the watermark also
-    * bounds lateness, an event arriving more than TTL behind the stream
-    * maximum is dropped; the reference would process it against a freshly
-    * recreated fork (its old fork being GC'd) — a documented edge delta,
-    * same steady-state behavior. `forkTtl = None` restores unbounded
-    * state (and is the path batch execution takes regardless, where the
-    * fold runs once per key and state never outlives the job).
-    *
-    * CHECKPOINT COMPATIBILITY: switching between `forkTtl = Some(_)` and
-    * `None` changes the streaming plan shape (watermark node +
-    * `EventTimeTimeout` vs `NoTimeout`), so existing checkpoints written
-    * under the other setting will not restart — use a fresh checkpoint
-    * location when changing TTL mode.
+  /** The TTL'd input of the state-store harness: a `__ts` watermark with
+    * delay = TTL, or the frame as it is without one.
     */
-  private def statefulFlat[S, O](df: DataFrame, keys: Seq[String], forkTtl: Option[Long])(
-      fold: (String, Seq[Event], Option[S]) => (Seq[O], Option[S]))(
-      implicit stateEnc: org.apache.spark.sql.Encoder[S],
-      outEnc: org.apache.spark.sql.Encoder[O]): Dataset[O] = {
+  private def watermarked(df: DataFrame, ttl: Option[Long]): DataFrame =
+    ttl.fold(df)(t => withTs(df).withWatermark("__ts", s"$t seconds"))
+
+  /** Shared harness for the sequential per-key ops: orders each
+    * micro-batch's rows of a key by (time, eventId), applies `fold`, and —
+    * the streaming twin of the reference's fork-TTL GC
+    * (`action.clj:1559-1596`: forks idle past `:fork-ttl` on the event
+    * clock are cleared) — registers an event-time timeout per key so the
+    * state store drops keys idle past the TTL instead of accumulating
+    * state forever over high-cardinality key spaces.
+    *
+    * Mechanics: the input (see [[watermarked]]) gets a watermark with
+    * delay = TTL; each batch re-arms the key's timeout at its last event
+    * time, so the timeout fires once the stream's event clock is TTL past
+    * the key's last event — the reference's
+    * `(- current-time fork-ttl) > fork.time` test with the watermark as
+    * `current-time`. Because the watermark also bounds lateness, an event
+    * arriving more than TTL behind the stream maximum is dropped; the
+    * reference would process it against a freshly recreated fork (its old
+    * fork being GC'd) — a documented edge delta, same steady-state
+    * behavior. `ttl = None` keeps unbounded state (and is the path a batch
+    * frame takes, where the fold runs once per key and state never
+    * outlives the job).
+    *
+    * CHECKPOINT COMPATIBILITY: switching between a TTL and none changes
+    * the streaming plan shape (watermark node + `EventTimeTimeout` vs
+    * `NoTimeout`), so existing checkpoints written under the other setting
+    * will not restart — use a fresh checkpoint location when changing TTL
+    * mode.
+    */
+  private def groupFold[K, T, S, O](grouped: KeyValueGroupedDataset[K, T], ttl: Option[Long],
+                                    order: T => (Long, Long))(
+      fold: (K, Seq[T], Option[S]) => (Seq[O], Option[S]))(
+      implicit stateEnc: Encoder[S], outEnc: Encoder[O]): Dataset[O] = {
+    val timeoutConf = if (ttl.isDefined) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
+    grouped.flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
+      (key: K, rows: Iterator[T], state: GroupState[S]) =>
+        if (state.hasTimedOut) { state.remove(); Iterator.empty }
+        else {
+          val es = rows.toSeq.sortBy(order)
+          val (out, next) = fold(key, es, state.getOption)
+          next match {
+            case Some(s) => state.update(s)
+            case None    => if (state.exists) state.remove()
+          }
+          if (next.isDefined && es.nonEmpty) ttl.foreach { _ =>
+            // fires once the watermark (= stream max - TTL) passes this
+            // key's last event; must stay strictly above the current
+            // watermark or Spark rejects the timestamp
+            val lastMs = es.iterator.map(order(_)._1).max / 1000000L
+            state.setTimeoutTimestamp(
+              math.max(lastMs + 1, state.getCurrentWatermarkMs() + 1))
+          }
+          out.iterator
+        }
+    }
+  }
+
+  /** [[groupFold]] over decoded [[Event]]s keyed by [[keyFn]] — the
+    * harness of the stream twins that still emit their own shape (count
+    * and moving windows, `stable`).
+    */
+  private def statefulFlat[S: Encoder, O: Encoder](df: DataFrame, keys: Seq[String], forkTtl: Option[Long])(
+      fold: (String, Seq[Event], Option[S]) => (Seq[O], Option[S])): Dataset[O] = {
     val spark = df.sparkSession
     import spark.implicits._
-    val ttlOpt = forkTtl.filter(_ => df.isStreaming)
-    val (src, timeoutConf) = ttlOpt match {
-      case Some(ttl) =>
-        // __ts must survive the projection: it is the only attribute
-        // carrying the watermark metadata, and EventTimeTimeout requires
-        // one in the child output (see typed()'s scaladoc)
-        (typed(withTs(df).withWatermark("__ts", s"$ttl seconds"), Seq(col("__ts"))),
-          GroupStateTimeout.EventTimeTimeout)
-      case None => (typed(df), GroupStateTimeout.NoTimeout)
-    }
-    src.groupByKey(keyFn(keys))
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
-        (key: String, events: Iterator[Event], state: GroupState[S]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val es = ordered(events)
-            val (out, next) = fold(key, es, state.getOption)
-            next match {
-              case Some(s) => state.update(s)
-              case None    => if (state.exists) state.remove()
-            }
-            if (next.isDefined && es.nonEmpty) ttlOpt.foreach { _ =>
-              // fires once the watermark (= stream max - TTL) passes this
-              // key's last event; must stay strictly above the current
-              // watermark or Spark rejects the timestamp
-              val lastMs = es.iterator.map(_.time).max / 1000000L
-              state.setTimeoutTimestamp(
-                math.max(lastMs + 1, state.getCurrentWatermarkMs() + 1))
-            }
-            out.iterator
-          }
-      }
+    val ttl = forkTtl.filter(_ => df.isStreaming)
+    groupFold(typed(watermarked(df, ttl)).groupByKey(keyFn(keys)), ttl,
+      (e: Event) => (e.time, e.eventId))(fold)
   }
 
   private def keyFn(keys: Seq[String])(e: Event): String =
@@ -854,8 +868,40 @@ object Streaming {
       case other     => e.attributes.getOrElse(other, "")
     }.mkString("\u0000")
 
-  private def ordered(events: Iterator[Event]): Seq[Event] =
-    events.toSeq.sortBy(e => (e.time, e.eventId))
+  /** The streaming driver of [[graft.operators.Analytics.perKeyFold]]:
+    * the frame's own rows, grouped on the top-level `keys` columns as
+    * typed values (a null key is its own group), each key's rows of a
+    * micro-batch folded in (time, eventId) order through `step`. The
+    * fold state lives in the state store under its own encoder; a null
+    * state is removed. Output keeps the input's columns.
+    */
+  private[graft] def foldStream[S: Encoder](df: DataFrame, keys: Seq[String], forkTtl: Option[Long],
+                                            init: () => S, step: Analytics.Step[S]): DataFrame = {
+    val src = watermarked(df, forkTtl)
+    val schema = src.schema
+    val Seq(ti, mi, ei) = Seq("time", "metric", "eventId").map(schema.fieldIndex)
+    val pi = schema.fieldNames.indexOf(Analytics.ProbeCol)
+    val ki = keys.map(schema.fieldIndex)
+    // Spark rejects an empty grouping key: a keyless fold is one constant group
+    val grouped: KeyValueGroupedDataset[_, Row] =
+      if (ki.isEmpty) src.groupByKey((_: Row) => 0)(Encoders.scalaInt)
+      else src.groupByKey((r: Row) => Row.fromSeq(ki.map(r.get)))(Encoders.row(StructType(ki.map(schema(_)))))
+    groupFold(grouped, forkTtl, (r: Row) => (r.getLong(ti), r.getLong(ei))) {
+      (_: Any, rows: Seq[Row], st: Option[S]) =>
+        var s = st.getOrElse(init())
+        val out = rows.flatMap { r =>
+          val m = if (r.isNullAt(mi)) null else Double.box(r.getDouble(mi))
+          val (s2, emit) = step(s, r.getLong(ti), m, if (pi < 0) null else r.get(pi))
+          s = s2
+          emit match {
+            case Analytics.Emit.Keep => Some(r)
+            case Analytics.Emit.Drop => None
+            case Analytics.Emit.SetMetric(v) => Some(Row.fromSeq(r.toSeq.updated(mi, v)))
+          }
+        }
+        (out, Option(s))
+    }(implicitly[Encoder[S]], Encoders.row(schema)).drop("__ts")
+  }
 
   /** `fixed-event-window` over a stream (`action.clj:233-262`): per-key
     * buffer of the current partial window in state; every N-th event
@@ -927,134 +973,6 @@ object Streaming {
     }
   }
 
-  /** `throttle` over a stream (`action.clj:1163-1217`): at most `count`
-    * events pass per duration; the window opens at the first event and
-    * re-opens at the first event past `start + duration` — same fold as
-    * `Analytics.throttle`.
-    */
-  def throttle(count: Int, durationSeconds: Long, keys: Seq[String] = Nil,
-               forkTtl: Option[Long] = Some(DefaultForkTtlSeconds))(df: DataFrame): Dataset[Event] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val durNs = durationSeconds * Event.NsPerSecond
-    statefulFlat[(Long, Int), Event](df, keys, forkTtl) { (_, events, st) =>
-      var (start, n) = st.getOrElse((Long.MinValue, 0))
-      val out = events.filter { e =>
-        if (start == Long.MinValue || e.time >= start + durNs) {
-          start = e.time; n = 1; true
-        } else if (n >= count) false
-        else { n += 1; true }
-      }
-      (out, Some((start, n)))
-    }
-  }
-
-  /** `ewma-timeless` over a stream (`action.clj:1249-1276`):
-    * m' = (1-r)*m + r*x, seeded at 0, one output per input.
-    */
-  def ewmaTimeless(r: Double, keys: Seq[String] = Nil,
-                   forkTtl: Option[Long] = Some(DefaultForkTtlSeconds))(df: DataFrame): Dataset[Event] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    statefulFlat[Double, Event](df, keys, forkTtl) { (_, events, st) =>
-      var m = st.getOrElse(0.0)
-      val out = events.map { e =>
-        e.metric match {
-          case Some(x) => m = (1 - r) * m + r * x; e.copy(metric = Some(m))
-          case None    => e
-        }
-      }
-      (out, Some(m))
-    }
-  }
-
-  /** `changed` over a stream (`action.clj:1329-1375`): pass only on field
-    * transition vs the previous event; `init` seeds the comparison. The
-    * comparison field is selected at plan time like the batch twin.
-    */
-  def changed(field: String, init: String, keys: Seq[String] = Nil,
-              forkTtl: Option[Long] = Some(DefaultForkTtlSeconds))(df: DataFrame): Dataset[Event] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val get: Event => String = field match {
-      case "host"    => _.host.orNull
-      case "service" => _.service.orNull
-      case "name"    => _.name.orNull
-      case "state"   => _.state.orNull
-      case other     => _.attributes.get(other).orNull
-    }
-    statefulFlat[(Boolean, String), Event](df, keys, forkTtl) { (_, events, st) =>
-      // state tuple carries an "initialized" flag so a legitimately-null
-      // previous value is distinguishable from absent state
-      var prev = st match {
-        case Some((_, v)) => v
-        case None         => init
-      }
-      val out = events.filter { e =>
-        val v = get(e)
-        val pass = v != prev
-        prev = v
-        pass
-      }
-      (out, Some((true, prev)))
-    }
-  }
-
-  /** `ddt` / `ddt-pos` over a stream (`action.clj:1042-1083`):
-    * d(metric)/d(time) vs the previous event per key; zero-dt pairs skip,
-    * the first event emits nothing, `-pos` drops negative derivatives.
-    */
-  def ddt(keys: Seq[String] = Nil, removeNeg: Boolean = false,
-          forkTtl: Option[Long] = Some(DefaultForkTtlSeconds))(df: DataFrame): Dataset[Event] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    statefulFlat[(Long, Double), Event](df, keys, forkTtl) { (_, events, st) =>
-      var prev = st
-      val out = events.flatMap { e =>
-        val r = (prev, e.metric) match {
-          case (Some((pt, pm)), Some(m)) if e.time != pt =>
-            val d = (m - pm) / (e.time - pt)
-            if (removeNeg && d < 0) None else Some(e.copy(metric = Some(d)))
-          case _ => None
-        }
-        e.metric.foreach(m => prev = Some((e.time, m)))
-        r
-      }
-      (out, prev)
-    }
-  }
-
-  /** `above-dt`/`below-dt`/`between-dt`/`outside-dt`/`cond-dt` over a
-    * stream (`action.clj:476-647`): the predicate must hold continuously
-    * for more than `dt` seconds, then matching events pass until it
-    * breaks. State = the start of the current holding run.
-    */
-  def condDt(pred: Event => Boolean, dtSeconds: Long, keys: Seq[String] = Nil,
-             forkTtl: Option[Long] = Some(DefaultForkTtlSeconds))(df: DataFrame): Dataset[Event] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val dtNs = dtSeconds * Event.NsPerSecond
-    statefulFlat[(Boolean, Long), Event](df, keys, forkTtl) { (_, events, st) =>
-      var run = st.filter(_._1).map(_._2)
-      val out = events.filter { e =>
-        if (pred(e)) {
-          if (run.isEmpty) run = Some(e.time)
-          e.time > run.get + dtNs
-        } else { run = None; false }
-      }
-      (out, Some((run.isDefined, run.getOrElse(0L))))
-    }
-  }
-
-  def aboveDt(threshold: Double, dtSeconds: Long, keys: Seq[String] = Nil)(df: DataFrame): Dataset[Event] =
-    condDt(_.metric.exists(_ > threshold), dtSeconds, keys)(df)
-  def belowDt(threshold: Double, dtSeconds: Long, keys: Seq[String] = Nil)(df: DataFrame): Dataset[Event] =
-    condDt(_.metric.exists(_ < threshold), dtSeconds, keys)(df)
-  def betweenDt(low: Double, high: Double, dtSeconds: Long, keys: Seq[String] = Nil)(df: DataFrame): Dataset[Event] =
-    condDt(_.metric.exists(m => m > low && m < high), dtSeconds, keys)(df)
-  def outsideDt(low: Double, high: Double, dtSeconds: Long, keys: Seq[String] = Nil)(df: DataFrame): Dataset[Event] =
-    condDt(_.metric.exists(m => m < low || m > high), dtSeconds, keys)(df)
-
   /** `stable` over a stream (`action.clj:2053-2138`): flap damping — a run
     * of equal values buffers until it has lasted `dt` seconds, then the
     * whole buffer flushes and subsequent run events pass through; runs
@@ -1090,34 +1008,6 @@ object Streaming {
         }
       }
       (out.toSeq, st.map(s => (s.value, s.start, s.buffer, s.flushed)))
-    }
-  }
-
-  /** `smax` / `smin` over a stream (`action.clj:2742-2795`): running
-    * extremum metric, re-emitted per input.
-    */
-  def smax(keys: Seq[String] = Nil,
-           forkTtl: Option[Long] = Some(DefaultForkTtlSeconds))(df: DataFrame): Dataset[Event] =
-    runningExtremum(df, keys, isMax = true, forkTtl)
-  def smin(keys: Seq[String] = Nil,
-           forkTtl: Option[Long] = Some(DefaultForkTtlSeconds))(df: DataFrame): Dataset[Event] =
-    runningExtremum(df, keys, isMax = false, forkTtl)
-
-  private def runningExtremum(df: DataFrame, keys: Seq[String], isMax: Boolean,
-                              forkTtl: Option[Long]): Dataset[Event] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    statefulFlat[Double, Event](df, keys, forkTtl) { (_, events, st) =>
-      var cur = st
-      val out = events.map { e =>
-        e.metric match {
-          case Some(x) =>
-            cur = Some(cur.fold(x)(c => if (isMax) math.max(c, x) else math.min(c, x)))
-            e.copy(metric = cur)
-          case None => e
-        }
-      }
-      (out, cur)
     }
   }
 

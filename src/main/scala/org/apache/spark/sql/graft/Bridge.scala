@@ -1,11 +1,12 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.{Dependency, OneToOneDependency, Partition, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Column ↔ Catalyst `Expression` / DataFrame ↔ `InternalRow` bridge.
   *
@@ -28,13 +29,34 @@ object Bridge {
   def toCatalyst(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
 
-  /** Execute the frame's physical plan and hand back the raw Tungsten rows.
-    * Lets per-partition kernels read individual fixed-width fields lazily
-    * (`UnsafeRow` getters) without paying the full row encoder — variable
-    * width columns (arrays, maps) stay as undecoded bytes unless touched.
+  /** The frame's raw Tungsten rows. Lets per-partition kernels read
+    * individual fixed-width fields lazily (`UnsafeRow` getters) without
+    * paying the full row encoder — variable width columns (arrays, maps)
+    * stay as undecoded bytes unless touched.
+    *
+    * Deferred: `queryExecution.toRdd` runs AQE's shuffle stages eagerly,
+    * so it is only called once a job asks for the partitions (the
+    * scheduler resolves an RDD's ancestry on the submitting thread).
+    * Building a plan over these rows starts no Spark job.
     */
-  def toInternalRows(df: DataFrame): RDD[InternalRow] =
-    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]].queryExecution.toRdd
+  def toInternalRows(df: DataFrame): RDD[InternalRow] = new DeferredRows(df)
+
+  private final class DeferredRows(@transient df: DataFrame)
+      extends RDD[InternalRow](df.sparkSession.sparkContext, Nil) {
+    @transient private lazy val rows =
+      df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]].queryExecution.toRdd
+    override protected def getDependencies: Seq[Dependency[_]] = Seq(new OneToOneDependency(rows))
+    override protected def getPartitions: Array[Partition] = rows.partitions
+    override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] =
+      firstParent[InternalRow].iterator(split, context)
+  }
+
+  /** Driver-side converter from Catalyst values of `dt` to Scala values. */
+  def toScala(dt: DataType): Any => Any = CatalystTypeConverters.createToScalaConverter(dt)
+
+  /** Evaluate a constant column (a literal, possibly cast) on the driver. */
+  def evalConstant(c: Column, dt: DataType): Any =
+    CatalystTypeConverters.convertToScala(toCatalyst(c).eval(), dt)
 
   /** Rebuild a DataFrame from Tungsten rows produced by a kernel over
     * [[toInternalRows]] output. The rows must already match `schema`.

@@ -116,7 +116,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming throttle == batch twin, state spans micro-batches") {
     val fixture = (1 to 10).map(i => ev(1, i * S, host = "a", id = i))
-    val out = runStream(df => Streaming.throttle(2, 4, Seq("host"))(df).toDF(),
+    val out = runStream(df => Analytics.throttle(2, 4, Seq("host"))(df).toDF(),
       Seq(fixture.take(5), fixture.drop(5)))
     val streamed = out.select("eventId").collect().map(_.getLong(0)).toSet
     val batch = Analytics.throttle(2, 4, Seq("host"))(events(fixture: _*))
@@ -127,7 +127,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming ewma == batch twin, state spans micro-batches") {
     val fixture = Seq(ev(10, 1 * S, id = 1), ev(20, 2 * S, id = 2),
       ev(2, 3 * S, id = 3), ev(8, 4 * S, id = 4))
-    val out = runStream(df => Streaming.ewmaTimeless(0.5, Seq("host"))(df).toDF(),
+    val out = runStream(df => Analytics.ewmaTimeless(0.5, Seq("host"))(df).toDF(),
       Seq(fixture.take(2), fixture.drop(2)))
     val streamed = out.select("eventId", "metric").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -141,7 +141,7 @@ class StreamingSpec extends AnyFunSuite {
     val fixture = Seq(
       ev(1, 1 * S, state = "ok", id = 1), ev(1, 2 * S, state = "critical", id = 2),
       ev(1, 3 * S, state = "critical", id = 3), ev(1, 4 * S, state = "ok", id = 4))
-    val out = runStream(df => Streaming.changed("state", "ok", Seq("host"))(df).toDF(),
+    val out = runStream(df => Analytics.changed("state", "ok", Seq("host"))(df).toDF(),
       Seq(fixture.take(2), fixture.drop(2)))
     val streamed = out.select("eventId").collect().map(_.getLong(0)).toSet
     val batch = Analytics.changed("state", "ok", Seq("host"))(events(fixture: _*))
@@ -152,7 +152,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming smax == batch twin") {
     val fixture = Seq(ev(3, 1 * S, id = 1), ev(9, 2 * S, id = 2),
       ev(5, 3 * S, id = 3), ev(11, 4 * S, id = 4))
-    val out = runStream(df => Streaming.smax(Seq("host"))(df).toDF(),
+    val out = runStream(df => Analytics.smax(Seq("host"))(df).toDF(),
       Seq(fixture.take(2), fixture.drop(2)))
     val streamed = out.select("eventId", "metric").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -280,7 +280,7 @@ class StreamingSpec extends AnyFunSuite {
     val fx = Seq(
       ev(10, 10 * S, id = 1), ev(30, 20 * S, id = 2), ev(20, 30 * S, id = 3),
       ev(60, 40 * S, id = 4), ev(70, 50 * S, id = 5))
-    val ddtOut = runStream(df => Streaming.ddt(Seq("host"))(df).toDF(),
+    val ddtOut = runStream(df => Analytics.ddt(Seq("host"))(df).toDF(),
       Seq(fx.take(2), fx.drop(2)))
     def m(df: DataFrame) = df.select("eventId", "metric").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -289,7 +289,7 @@ class StreamingSpec extends AnyFunSuite {
     // above-dt: metric > 25 holds from id=4 on; dt=15s → passes past 40+15
     val fx2 = Seq(ev(10, 10 * S, id = 1), ev(30, 20 * S, id = 2), ev(40, 30 * S, id = 3),
       ev(20, 40 * S, id = 4), ev(50, 50 * S, id = 5), ev(60, 80 * S, id = 6))
-    val aboveOut = runStream(df => Streaming.aboveDt(25, 15, Seq("host"))(df).toDF(),
+    val aboveOut = runStream(df => Analytics.aboveDt(25, 15, Seq("host"))(df).toDF(),
       Seq(fx2.take(3), fx2.drop(3)))
     assert(aboveOut.select("eventId").collect().map(_.getLong(0)).toSet ==
       Analytics.aboveDt(25, 15, Seq("host"))(events(fx2: _*))
@@ -403,8 +403,8 @@ class StreamingSpec extends AnyFunSuite {
     // with TTL: idle keys are evicted, so total state stays bounded
     def probe(op: DataFrame => DataFrame) = stateRowCounts(op, batches)
     for (op <- Seq[DataFrame => DataFrame](
-      df => Streaming.ewmaTimeless(0.5, Seq("host"), forkTtl = Some(10))(df).toDF(),
-      df => Streaming.smax(Seq("host"), forkTtl = Some(10))(df).toDF(),
+      df => Analytics.ewmaTimeless(0.5, Seq("host"), forkTtl = Some(10))(df).toDF(),
+      df => Analytics.smax(Seq("host"), forkTtl = Some(10))(df).toDF(),
       df => Streaming.stable(5, "state", Seq("host"), forkTtl = Some(10))(df).toDF())) {
       val rows = probe(op)
       assert(rows.head == 5, s"first batch should hold its 5 keys, got $rows")
@@ -414,7 +414,7 @@ class StreamingSpec extends AnyFunSuite {
     }
 
     // control: forkTtl = None accumulates every key ever seen
-    val unbounded = probe(df => Streaming.ewmaTimeless(0.5, Seq("host"), forkTtl = None)(df).toDF())
+    val unbounded = probe(df => Analytics.ewmaTimeless(0.5, Seq("host"), forkTtl = None)(df).toDF())
     assert(unbounded == Seq(5L, 10L, 15L, 20L), s"NoTimeout must accumulate, got $unbounded")
   }
 
@@ -486,7 +486,7 @@ class StreamingSpec extends AnyFunSuite {
     val ck = java.nio.file.Files.createTempDirectory("graft-ck").toString
     val outDir = java.nio.file.Files.createTempDirectory("graft-ck-out").toString + "/out"
     val ms = MemoryStream[Event]
-    def start() = Streaming.ewmaTimeless(0.5, Seq("host"))(ms.toDF()).toDF()
+    def start() = Analytics.ewmaTimeless(0.5, Seq("host"))(ms.toDF()).toDF()
       .writeStream.format("json").option("path", outDir)
       .option("checkpointLocation", ck).outputMode("append").start()
     val fixture = Seq(ev(10, 1 * S, id = 1), ev(20, 2 * S, id = 2),
