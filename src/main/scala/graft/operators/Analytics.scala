@@ -156,9 +156,11 @@ object Analytics {
     * the streams' idle-key eviction ([[graft.streaming.Streaming.DefaultForkTtlSeconds]]);
     * a batch fold ends with its job, so it ignores it.
     *
-    * Keys: a top-level column is read directly — string or integral
-    * (`salt`'s `__salt`), and a null key is its own group, distinct from
-    * `""`; any other key is looked up in `attributes`.
+    * Keys: a top-level column is read directly — any atomic type but
+    * floating-point and binary, whose values the batch scan cannot compare
+    * by equality (`salt`'s int `__salt` included) — and a null key is its
+    * own group, distinct from `""`; any other key is looked up in
+    * `attributes`.
     */
   def perKeyFold[S: Encoder](df: DataFrame, keys: Seq[String], probe: Option[Column] = None,
                              forkTtl: Option[Long] = Some(Streaming.DefaultForkTtlSeconds))(
@@ -191,10 +193,11 @@ object Analytics {
       case ((d, names), (k, i)) =>
         if (!df.columns.contains(k)) (d.withColumn(s"__key$i", field(df, k)), names :+ s"__key$i")
         else df.schema(k).dataType match {
-          case _: StringType | ByteType | ShortType | IntegerType | LongType => (d, names :+ k)
+          case _: StringType | BooleanType | ByteType | ShortType | IntegerType | LongType |
+               DateType | TimestampType | TimestampNTZType | _: DecimalType => (d, names :+ k)
           case dt => throw new IllegalArgumentException(
             s"per-key-scan key '$k' is a top-level ${dt.simpleString} column; " +
-              "only string or integral columns (or attribute-map keys) can be grouping keys")
+              "floating-point, binary and complex columns cannot be grouping keys")
         }
     }
     run(input, keyCols).drop(input.columns.diff(df.columns).toSeq: _*)
@@ -322,9 +325,7 @@ object Analytics {
         }
       ((t, m), emit)
     }(Encoders.tuple(Encoders.scalaLong, Encoders.DOUBLE))
-  def ddtPos(keys: Seq[String] = Nil,
-             forkTtl: Option[Long] = Some(Streaming.DefaultForkTtlSeconds))(df: DataFrame): DataFrame =
-    ddt(keys, removeNeg = true, forkTtl)(df)
+  def ddtPos(keys: Seq[String] = Nil)(df: DataFrame): DataFrame = ddt(keys, removeNeg = true)(df)
 
   /** `smax` / `smin` — running extremum, re-emitted per input
     * (`action.clj:2742-2795`): metric becomes the running max/min; an
@@ -352,23 +353,20 @@ object Analytics {
     */
   def condDt(condition: Condition, dtSeconds: Long, keys: Seq[String] = Nil,
              forkTtl: Option[Long] = Some(Streaming.DefaultForkTtlSeconds))(df: DataFrame): DataFrame =
-    holdsFor(df, keys, forkTtl, dtSeconds, Some(condition.column))((_, p) => p == true)
+    holdsFor(df, keys, dtSeconds, Some(condition.column), forkTtl)((_, p) => p == true)
 
-  def aboveDt(threshold: Double, dtSeconds: Long, keys: Seq[String] = Nil,
-              forkTtl: Option[Long] = Some(Streaming.DefaultForkTtlSeconds))(df: DataFrame): DataFrame =
-    holdsFor(df, keys, forkTtl, dtSeconds)((m, _) => m != null && m > threshold)
-  def belowDt(threshold: Double, dtSeconds: Long, keys: Seq[String] = Nil,
-              forkTtl: Option[Long] = Some(Streaming.DefaultForkTtlSeconds))(df: DataFrame): DataFrame =
-    holdsFor(df, keys, forkTtl, dtSeconds)((m, _) => m != null && m < threshold)
-  def betweenDt(low: Double, high: Double, dtSeconds: Long, keys: Seq[String] = Nil,
-                forkTtl: Option[Long] = Some(Streaming.DefaultForkTtlSeconds))(df: DataFrame): DataFrame =
-    holdsFor(df, keys, forkTtl, dtSeconds)((m, _) => m != null && m > low && m < high)
-  def outsideDt(low: Double, high: Double, dtSeconds: Long, keys: Seq[String] = Nil,
-                forkTtl: Option[Long] = Some(Streaming.DefaultForkTtlSeconds))(df: DataFrame): DataFrame =
-    holdsFor(df, keys, forkTtl, dtSeconds)((m, _) => m != null && (m < low || m > high))
+  def aboveDt(threshold: Double, dtSeconds: Long, keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
+    holdsFor(df, keys, dtSeconds)((m, _) => m != null && m > threshold)
+  def belowDt(threshold: Double, dtSeconds: Long, keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
+    holdsFor(df, keys, dtSeconds)((m, _) => m != null && m < threshold)
+  def betweenDt(low: Double, high: Double, dtSeconds: Long, keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
+    holdsFor(df, keys, dtSeconds)((m, _) => m != null && m > low && m < high)
+  def outsideDt(low: Double, high: Double, dtSeconds: Long, keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
+    holdsFor(df, keys, dtSeconds)((m, _) => m != null && (m < low || m > high))
 
-  private def holdsFor(df: DataFrame, keys: Seq[String], forkTtl: Option[Long], dtSeconds: Long,
-                       probe: Option[Column] = None)(holds: (java.lang.Double, Any) => Boolean): DataFrame = {
+  private def holdsFor(df: DataFrame, keys: Seq[String], dtSeconds: Long, probe: Option[Column] = None,
+                       forkTtl: Option[Long] = Some(Streaming.DefaultForkTtlSeconds))(
+      holds: (java.lang.Double, Any) => Boolean): DataFrame = {
     val dtNs = dtSeconds * Event.NsPerSecond
     perKeyFold(df, keys, probe, forkTtl)(() => null: java.lang.Long) { (start, t, m, p) =>
       if (!holds(m, p)) (null, Emit.Drop)

@@ -13,8 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `ddt`, `ddt-pos`, the five `*-dt` and `changed`) built through
   * `Engine.applyOp` as a pipeline builds them: one definition per action,
   * so a batch frame and a stream give the same rows — including on null
-  * metrics, null fields and null or integral keys — keep every input
-  * column, and building the batch plan starts no Spark job.
+  * metrics, null fields and null, integral or other typed keys — keep
+  * every input column, and building the batch plan starts no Spark job.
   */
 class FoldSpec extends AnyFunSuite {
   import TestSpark._
@@ -122,6 +122,28 @@ class FoldSpec extends AnyFunSuite {
       expected ++ Map(7L -> Some(35.0), 8L -> Some(57.5)))
     assert(byId(op("ewma-timeless", Seq("host", "__salt"))(salted(events(fx: _*)))) ==
       expected ++ Map(7L -> Some(35.0), 8L -> Some(40.0)))
+  }
+
+  test("boolean, date, timestamp and decimal key columns group as in a stream; a double key is rejected") {
+    val fx = (1 to 8).map(i => ev(i * 3 % 7, i * S, host = if (i % 3 == 0) "a" else "b", id = i))
+    val typedKeys = (df: DataFrame) => {
+      val a = col("host") === "a"
+      df.withColumn("kb", a)
+        .withColumn("kd", date_add(lit("2024-01-01").cast("date"), when(a, 0).otherwise(1)))
+        .withColumn("kts", when(a, lit("2024-01-01 00:00:00")).otherwise(lit("2024-01-02 00:00:00")).cast("timestamp"))
+        .withColumn("kdec", when(a, lit(1.5)).otherwise(lit(2.5)).cast("decimal(10,2)"))
+    }
+    Seq("kb", "kd", "kts", "kdec").foreach { k =>
+      Seq("ewma-timeless", "smax", "ddt", "changed").foreach { action =>
+        assertStreamEqualsBatch(action, fx, 4, Seq(k), typedKeys)
+        assert(byId(op(action, Seq(k))(typedKeys(events(fx: _*)))) == byId(op(action)(events(fx: _*))),
+          s"$action keyed by $k groups as keyed by host")
+      }
+    }
+    folds.foreach { case (action, _) =>
+      val e = intercept[IllegalArgumentException](op(action, Seq("metric"))(events(fx: _*)))
+      assert(e.getMessage.contains("metric"), action)
+    }
   }
 
   test("smax/smin: an event without a metric carries the extremum so far, in both modes") {
